@@ -13,6 +13,8 @@ not user-given (``engine/measure/DecayedSimilarity.java:66-75``,
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -21,6 +23,32 @@ DECAY_FACTOR = 0.05
 QGRAM = 3
 K_MAX = 50
 INFLATION_FACTOR = 1000
+
+
+# ---------------------------------------------------------------------------
+# vector literals
+# ---------------------------------------------------------------------------
+
+def _sql_double(x: float) -> str:
+    """One double as Spark SQL: ``repr`` is Python's shortest round-trip
+    decimal and the ``D`` suffix parses it as an exact double literal
+    (-0.0 and subnormals included); non-finite values have no literal
+    syntax and render as ``double('NaN')`` / ``double('Infinity')``."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    if math.isnan(x):
+        return "double('NaN')"
+    return "double('Infinity')" if x > 0 else "double('-Infinity')"
+
+
+def vec_lit(vals) -> Column:
+    """``array<double>`` literal of a driver-side vector (query vector,
+    centroid, codebook entry, LUT) as ONE SQL ``array(...)`` expression —
+    the same CreateArray-of-literals ``F.lit(list)`` builds, at a handful
+    of py4j round trips instead of several per element.  Every value,
+    non-finite ones included, round-trips bit-exactly."""
+    return F.expr("array(" + ", ".join(_sql_double(v) for v in vals) + ")")
 
 
 # ---------------------------------------------------------------------------

@@ -89,23 +89,6 @@ __all__ = [
 ]
 
 
-def _residual_expr(vec_col: str, cell_col: str, cmap: dict[int, list[float]]):
-    """Row-local residual ``v − centroid(own cell)`` as a when-chain over
-    the bounded cell set (the same construction as
-    ``operators/pq.py ivf_pq_topk`` residual mode, applied corpus-wide at
-    encode time instead of probe-time)."""
-    from simsearch_spark.operators.kmeans import _lit_vec
-
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    res = None
-    for cid in sorted(cmap, reverse=True):
-        sub = F.zip_with(dbl, _lit_vec(cmap[cid]), lambda x, m: x - m)
-        res = sub if res is None else F.when(
-            F.col(cell_col) == F.lit(cid), sub
-        ).otherwise(res)
-    return res
-
-
 def encode_residual_codes(
     emb: DataFrame,
     id_col: str,
@@ -118,12 +101,13 @@ def encode_residual_codes(
     own cell's residual.  Pure codegen column expressions (argmin over
     ksub literal centroids per subspace), row-local, zero shuffles — the
     corpus never moves; identical code values to the probe-time encode
-    inside ``ivf_pq_topk`` (same residual, same strict-< argmin)."""
-    from simsearch_spark.operators.pq import pq_encode
+    inside ``ivf_pq_topk`` (the same ``residual_expr`` over every cell,
+    the same ``pq_encode`` argmin)."""
+    from simsearch_spark.operators.pq import pq_encode, residual_expr
 
     enc_in = emb.select(
         F.col(id_col),
-        _residual_expr(vec_col, cell_col, cmap).alias("__r"),
+        residual_expr(vec_col, cell_col, cmap, sorted(cmap)).alias("__r"),
         F.col(cell_col).alias("cell"),
     )
     enc = pq_encode(enc_in, id_col, "__r", codebooks)
@@ -151,14 +135,17 @@ def _train_vector_family(
     the pivot distance embedding) into ``out_dir``.  ``emb`` should
     arrive persisted — the trainers make several passes over it.
     Returns ``(params_fragment, n_vectors)`` for the manifest."""
-    from simsearch_spark.queries.cluster import PQ_ITERS, PQ_KSUB, PQ_M, PQ_TRAIN_N
-    from simsearch_spark.queries.ivfpq import (
+    from concurrent.futures import ThreadPoolExecutor
+
+    from simsearch_spark.operators.pq import (
+        PQ_ITERS,
+        PQ_KSUB,
+        PQ_M,
+        PQ_TRAIN_N,
         _cent_rows6,
         _sample_rows,
         _train_books_residual_rows,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     # one centroid aggregation + one bounded-sample collect; the Lloyd
     # chains run driver-side on the collected sample (r14 — identical

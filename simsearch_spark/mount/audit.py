@@ -60,13 +60,12 @@ def _brute_multi_topk(
     """Exact cosine top-k ids per query, ONE corpus scan for all queries
     (per-row cosine against each query literal, per-query rank window) —
     the ground-truth arm."""
-    from simsearch_spark.functions.measures import cosine_similarity
-    from simsearch_spark.operators.kmeans import _lit_vec
+    from simsearch_spark.functions.measures import cosine_similarity, vec_lit
 
     entries = [
         F.struct(
             F.lit(qid).alias("qid"),
-            F.round(cosine_similarity(F.col(vec_col), _lit_vec(qv)), 6).alias("cos"),
+            F.round(cosine_similarity(F.col(vec_col), vec_lit(qv)), 6).alias("cos"),
         )
         for qid, qv in qs
     ]

@@ -214,24 +214,14 @@ def _check_cells_known(
 def _assign_cells(
     emb: DataFrame, id_col: str, vec_col: str, cmap: dict[int, list[float]]
 ):
-    """Nearest-centroid assignment for rows without one — the identical
-    strict-< argmin ``ivf_pq_topk`` uses inline (broadcast literal
-    centroids, codegen, row-local)."""
-    from simsearch_spark.functions.measures import euclidean_distance
-    from simsearch_spark.operators.kmeans import _lit_vec
+    """Nearest-centroid assignment for rows without one — the
+    ``nearest_centroid`` argmin ``ivf_pq_topk`` uses inline (broadcast
+    literal centroids, codegen, row-local)."""
+    from simsearch_spark.operators.pq import nearest_centroid
 
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    euclidean_distance(F.col(vec_col), _lit_vec(vec)).alias("d"),
-                    F.lit(int(cid)).alias("cid"),
-                )
-                for cid, vec in sorted(cmap.items())
-            ]
-        )
+    return emb.withColumn(
+        "__cell", nearest_centroid(F.col(vec_col), cmap)["cluster_id"]
     )
-    return emb.withColumn("__cell", best["cid"])
 
 
 def _drop_existing_ids(
@@ -643,7 +633,7 @@ def _decode_cell_expr(centroid: list[float], books: list[dict[int, list[float]]]
     codebook entry its stored code names and add the centroid slice —
     the exact inverse of ``encode_residual_codes`` for that cell (pure
     codegen column expressions, row-local, zero shuffle)."""
-    from simsearch_spark.operators.kmeans import _lit_vec
+    from simsearch_spark.functions.measures import vec_lit
 
     m = len(books)
     dsub = len(centroid) // m
@@ -654,9 +644,9 @@ def _decode_cell_expr(centroid: list[float], books: list[dict[int, list[float]]]
             raise ValueError(
                 f"split_cell: codebook {j} keys are not contiguous 0..ksub-1"
             )
-        arr = F.array(*[_lit_vec([float(x) for x in cb[c]]) for c in keys])
+        arr = F.array(*[vec_lit(cb[c]) for c in keys])
         picked = F.element_at(arr, F.col(f"code_{j}").cast("int") + 1)
-        cent = _lit_vec([float(x) for x in centroid[j * dsub : (j + 1) * dsub]])
+        cent = vec_lit(centroid[j * dsub : (j + 1) * dsub])
         segs.append(F.zip_with(cent, picked, lambda a, b: a + b))
     return F.concat(*segs)
 

@@ -139,32 +139,20 @@ def serve_ivfpq_topk(
     with a pushed ``IN`` filter on the bounded candidate ids).
 
     Identical candidate and scoring arithmetic to
-    ``operators/pq.py ivf_pq_topk(residual=True)``: same probe rule
-    (L2², ties by cell id), same per-cell query-residual LUTs, same
-    round-6 ADC distance, same cosine rerank — hash-equal output, zero
-    training."""
-    from simsearch_spark.functions.measures import cosine_similarity
-    from simsearch_spark.operators.kmeans import _lit_vec
-    from simsearch_spark.operators.pq import _adc_dist_expr
+    ``operators/pq.py ivf_pq_topk``: the same ``probe_cells`` router
+    (L2², ties by cell id), the same ``cell_adc_expr`` per-cell
+    query-residual LUTs and round-6 ADC distance, the same cosine rerank
+    — hash-equal output, zero training."""
+    from simsearch_spark.functions.measures import cosine_similarity, vec_lit
+    from simsearch_spark.operators.pq import cell_adc_expr, probe_cells
 
     cmap = load_centroid_map(spark, mount_dir)
     books = load_codebooks(spark, mount_dir)
     qv = [float(x) for x in query_vec]
-
-    by_dist = sorted(
-        cmap.items(),
-        key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0]),
-    )
-    probe_ids = [cid for cid, _v in by_dist[:n_probe]]
+    probe_ids = probe_cells(cmap, qv, n_probe)
 
     codes = read_codes(spark, mount_dir).where(F.col("cell").isin(probe_ids))
-    adc = None
-    for cid in reversed(probe_ids):
-        qres = [a - b for a, b in zip(qv, cmap[cid])]
-        e = _adc_dist_expr(books, qres)
-        adc = e if adc is None else F.when(
-            F.col("cell") == F.lit(cid), e
-        ).otherwise(adc)
+    adc = cell_adc_expr(books, qv, cmap, probe_ids, "cell")
     cand = (
         codes.select(F.col(id_col), adc.alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
@@ -183,7 +171,7 @@ def serve_ivfpq_topk(
     lookup = emb.where(F.col(id_col).isin(ids)).select(
         F.col(id_col),
         adc_lit.alias("adc_dist"),
-        F.round(cosine_similarity(F.col(vec_col), _lit_vec(qv)), 6).alias("cos_sim"),
+        F.round(cosine_similarity(F.col(vec_col), vec_lit(qv)), 6).alias("cos_sim"),
     )
     return (
         lookup.select(F.col(id_col).alias("id"), "adc_dist", "cos_sim")
@@ -218,18 +206,12 @@ def serve_ivfpq_multi_topk(
     from pyspark.sql.window import Window
 
     from simsearch_spark.functions.measures import cosine_similarity
-    from simsearch_spark.operators.pq import _adc_luts
+    from simsearch_spark.operators.pq import _adc_luts, probe_cells
 
     cmap = load_centroid_map(spark, mount_dir)
     books = load_codebooks(spark, mount_dir)
     qs = [(int(qid), [float(x) for x in qv]) for qid, qv in queries]
-    probes: dict[int, list[int]] = {}
-    for qid, qv in qs:
-        by_dist = sorted(
-            cmap.items(),
-            key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0]),
-        )
-        probes[qid] = [cid for cid, _v in by_dist[:n_probe]]
+    probes = {qid: probe_cells(cmap, qv, n_probe) for qid, qv in qs}
     union_cells = sorted({c for ps in probes.values() for c in ps})
 
     codes = read_codes(spark, mount_dir).where(F.col("cell").isin(union_cells))
@@ -364,8 +346,7 @@ def serve_pivot_knn(
     joins the survivors back to the vector store by id.  Identical answer
     to ``operators/pivot.py pivot_knn`` (pruned or brute — the bound never
     overestimates) — tests/test_mount.py."""
-    from simsearch_spark.functions.measures import euclidean_distance
-    from simsearch_spark.operators.kmeans import _lit_vec
+    from simsearch_spark.functions.measures import euclidean_distance, vec_lit
     from simsearch_spark.operators.pivot import embedding_lower_bound
 
     pivots = load_pivots(spark, mount_dir)
@@ -377,7 +358,7 @@ def serve_pivot_knn(
     embd = spark.read.parquet(os.path.join(mount_dir, "pivot_embedded"))
     with_lb = embd.withColumn("lb", embedding_lower_bound(len(pivots), q_emb))
 
-    exact_dist = euclidean_distance(F.col(vec_col), _lit_vec(qv))
+    exact_dist = euclidean_distance(F.col(vec_col), vec_lit(qv))
     # pass 1: radius = exact k-th distance among the k best lb rows — the
     # k seed vectors come from one pushed-IN point-lookup
     seed_ids = [

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simsearch_spark.functions import measures
+from simsearch_spark.operators.pq import nearest_centroid, probe_cells
 
 
 def lcg_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -49,8 +50,7 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
         raise ValueError(f"{len(planes)} hyperplanes > 63-bit signed bucket key")
     acc = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        pv = F.array(*[F.lit(float(x)) for x in plane])
-        d = measures.dot_product(vec, pv)
+        d = measures.dot_product(vec, measures.vec_lit(plane))
         acc = acc + F.when(d > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
     return acc
 
@@ -80,8 +80,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact brute-force cosine top-k (the correctness baseline every ANN
     variant is measured against)."""
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    score = F.round(measures.cosine_similarity(F.col(vec_col), qv), 6)
+    score = F.round(measures.cosine_similarity(F.col(vec_col), measures.vec_lit(query_vec)), 6)
     return (
         df.withColumn("cos_sim", score)
         .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
@@ -113,8 +112,7 @@ def lsh_cosine_topk(
         if sum(a * b for a, b in zip(query_vec, plane)) > 0
     )
     probe = F.bit_count(F.col("bucket").bitwiseXOR(F.lit(q_bits))) <= probe_hamming
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    score = F.round(measures.cosine_similarity(F.col(vec_col), qv), 6)
+    score = F.round(measures.cosine_similarity(F.col(vec_col), measures.vec_lit(query_vec)), 6)
     return (
         bucketed.where(probe)
         .withColumn("cos_sim", score)
@@ -222,36 +220,13 @@ def ivf_topk(
     nearest centroid computed on the fly (one broadcast-join pass).
     """
     cent = [(r[0], list(r[1])) for r in centroids.collect()]
-    # deterministic probe order: distance, then cluster id (collect order is
-    # arbitrary and a bare stable sort would leak it into ties)
-    by_dist = sorted(
-        cent, key=lambda c: (sum((a - b) ** 2 for a, b in zip(query_vec, c[1])), c[0])
-    )
-    probe_ids = [cid for cid, _v in by_dist[:n_probe]]
+    probe_ids = probe_cells(cent, query_vec, n_probe)
 
     if assign_col is None:
-        # assign rows to nearest centroid inline (centroids broadcast as
-        # literals); array_min over (dist, id) structs keeps each distance
-        # expression in the codegen tree ONCE — a folded when-chain doubles
-        # the tree per centroid (see operators/kmeans.py::assign_clusters)
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        measures.euclidean_distance(
-                            F.col(vec_col), F.lit([float(x) for x in vec])
-                        ).alias("d"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, vec in sorted(cent)
-                ]
-            )
-        )
-        df = df.withColumn("__cluster", best["cid"])
+        df = df.withColumn("__cluster", nearest_centroid(F.col(vec_col), cent)["cluster_id"])
         assign_col = "__cluster"
 
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    score = F.round(measures.cosine_similarity(F.col(vec_col), qv), 6)
+    score = F.round(measures.cosine_similarity(F.col(vec_col), measures.vec_lit(query_vec)), 6)
     return (
         df.where(F.col(assign_col).isin(probe_ids))
         .withColumn("cos_sim", score)

@@ -20,19 +20,20 @@ the driver (k=8, dim=64 → 512 values), the same bounded-centroid-collect
 contract as IVF training (operators/ann.py).  The corpus itself never
 shuffles for assignment.  TWO assignment kernels share that contract:
 
-- ``literal`` (k ≤ LITERAL_K_MAX): distances evaluated in whole-stage
-  codegen against literal centroid arrays — zero Python, but the codegen
-  tree grows with k (k=8 once produced multi-MiB task binaries; see
-  `assign_clusters`), so it is capped.
-- ``table`` (large k): an Arrow ``mapInPandas`` kernel over a broadcast
-  centroid ndarray — task-binary size is O(1) in k, letting k grow with
-  the corpus (the published SemDeDup recipe needs 10⁴–10⁵ clusters at
-  100 TB).  The kernel replays the engines' exact IEEE arithmetic
-  (ascending-index left-fold of ``d*d``, strict-``<`` argmin keeping the
-  lowest cluster id) so both paths are BIT-IDENTICAL — equality-tested in
-  tests/test_cluster.py.
+- ``assign_clusters`` (k ≤ LITERAL_K_MAX): distances evaluated in
+  whole-stage codegen against literal centroid arrays
+  (``operators/pq.py nearest_centroid``) — zero Python, but the codegen
+  tree grows with k (k=8 once produced multi-MiB task binaries), so it
+  is capped.
+- ``assign_clusters_table`` (large k): an Arrow ``mapInPandas`` kernel
+  over a broadcast centroid ndarray — task-binary size is O(1) in k,
+  letting k grow with the corpus (the published SemDeDup recipe needs
+  10⁴–10⁵ clusters at 100 TB).  The kernel replays the engines' exact
+  IEEE arithmetic (ascending-index left-fold of ``d*d``, strict-``<``
+  argmin keeping the lowest cluster id) so both paths are BIT-IDENTICAL
+  — equality-tested in tests/test_cluster.py.
 
-``kmeans_assign(assignment="auto")`` picks per call.
+``kmeans_assign`` picks the table kernel iff k > LITERAL_K_MAX.
 
 Reference scope note: the reference engine has no clustering operator
 (clusters arrive pre-labeled, e.g. ``pivoting/` uses data-dependent pivot
@@ -41,10 +42,10 @@ selection instead); this is part of the LLM-pipeline extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simsearch_spark.functions.measures import euclidean_distance
+from simsearch_spark.operators.pq import nearest_centroid
 
 
 #: Above this k, literal-centroid codegen trees get JIT-hostile (multi-MiB
@@ -52,36 +53,13 @@ from simsearch_spark.functions.measures import euclidean_distance
 LITERAL_K_MAX = 32
 
 
-def _lit_vec(vals: list[float]) -> Column:
-    return F.lit([float(v) for v in vals])
-
-
 def assign_clusters(
     df: DataFrame, vec_col: str, centroids: dict[int, list[float]]
 ) -> DataFrame:
     """Add ``cluster_id`` (nearest centroid, L2; lowest id wins ties) and
-    ``dist`` columns.  Pure column expressions — no shuffle, no UDF.
-
-    The argmin is ``array_min`` over (dist, cluster_id) structs: Spark's
-    struct ordering compares dist first, then cluster_id, which is exactly
-    the strict-``<``/lowest-id-on-ties rule.  Each centroid's distance
-    expression appears ONCE — a folded when-chain would re-embed every
-    prior distance inside each comparison, doubling the codegen tree per
-    centroid (k=8 produced multi-MiB task binaries and dominated runtime
-    with JIT compilation, not data)."""
-    items = sorted(centroids.items())
-    vec = F.col(vec_col)
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    euclidean_distance(vec, _lit_vec(cvec)).alias("dist"),
-                    F.lit(cid).alias("cluster_id"),
-                )
-                for cid, cvec in items
-            ]
-        )
-    )
+    ``dist`` columns.  Pure column expressions — no shuffle, no UDF: the
+    ``nearest_centroid`` struct argmin."""
+    best = nearest_centroid(F.col(vec_col), centroids)
     return df.withColumn("cluster_id", best["cluster_id"]).withColumn("dist", best["dist"])
 
 
@@ -195,18 +173,14 @@ def kmeans_assign(
     vec_col: str,
     k: int = 8,
     iters: int = 2,
-    assignment: str = "auto",
 ) -> DataFrame:
     """Run ``iters`` deterministic Lloyd iterations and return ``df`` with
     final ``cluster_id`` + ``dist`` columns.  Empty clusters keep their
     previous centroid (mirrored by the oracle's LEFT JOIN + coalesce).
-
-    assignment: ``"literal"`` (codegen, small k), ``"table"`` (broadcast
-    Arrow kernel, any k), or ``"auto"`` (table iff k > LITERAL_K_MAX).
-    Both kernels are bit-identical — the choice is a physical-plan knob."""
-    if assignment == "auto":
-        assignment = "table" if k > LITERAL_K_MAX else "literal"
-    assign = assign_clusters if assignment == "literal" else assign_clusters_table
+    Assignment uses the broadcast Arrow kernel iff k > LITERAL_K_MAX, the
+    codegen literal argmin otherwise — bit-identical kernels, so the
+    choice is a physical-plan knob."""
+    assign = assign_clusters_table if k > LITERAL_K_MAX else assign_clusters
     # persist across the training passes (r14): the seed collect and each
     # Lloyd mean re-scan the frame — without the pin every pass re-runs
     # the caller's lineage (scan + any fan-out exchange).  The cache is

@@ -78,8 +78,7 @@ def embed_distances(
     dist_fn = METRICS[metric]
     out = df
     for i, (_pid, vec) in enumerate(pivots):
-        pv = F.array(*[F.lit(float(x)) for x in vec])
-        out = out.withColumn(f"emb_{i}", dist_fn(F.col(vec_col), pv))
+        out = out.withColumn(f"emb_{i}", dist_fn(F.col(vec_col), measures.vec_lit(vec)))
     return out
 
 
@@ -114,8 +113,7 @@ def pivot_knn(
     excludes.  Exact because lb never overestimates the true distance.
     """
     dist_fn = METRICS[metric]
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact_dist = dist_fn(F.col(vec_col), qv)
+    exact_dist = dist_fn(F.col(vec_col), measures.vec_lit(query_vec))
 
     if not prune or not pivots:
         return (

@@ -49,10 +49,16 @@ def _facet_sim_frame(
     columns; auto scales cross-joined as broadcast 1-row aggregates.
 
     NULL attribute values yield sim 0 (not dropped): the entity can still
-    rank on its other facets (RankAggregator.java:239-241).
+    rank on its other facets (RankAggregator.java:239-241).  Each facet's
+    ``filter`` is a P2 pre-filter applied before scoring, as in
+    ``single_facet_topk``: on one table the candidates are the rows that
+    pass every facet's filter; on the multi-table path each frame keeps
+    the rows that pass its own facet's filter.
     """
     cols = {c: F.col(c) for c in df.columns}
     scored = df
+    for cond in dict.fromkeys(f.filter for f in facets if f.filter):
+        scored = scored.where(F.expr(cond))
     for f in facets:
         bound = Facet(**{**f.__dict__, "query_value": topk.resolve_query_value(df, f)})
         d = topk.facet_distance(cols, bound)

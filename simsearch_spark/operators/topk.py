@@ -72,7 +72,7 @@ def facet_distance(df_cols: dict[str, Column], facet: Facet) -> Column:
         return measures.jaccard_distance(grams, qg)
     if facet.kind == "vector":
         vec = df_cols[facet.value_cols[0]]
-        qvec = F.array(*[F.lit(float(x)) for x in q])
+        qvec = measures.vec_lit(q)
         metric = {
             "euclidean": measures.euclidean_distance,
             "manhattan": measures.manhattan_distance,

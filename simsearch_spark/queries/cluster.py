@@ -15,8 +15,15 @@ from pyspark.sql import functions as F
 
 from simsearch_spark.operators.fanout import fanout_for_kernel
 from simsearch_spark.operators.kmeans import auto_km_k, kmeans_assign
+from simsearch_spark.operators.pq import (
+    EMB_DIM,
+    PQ_ITERS,
+    PQ_KSUB,
+    PQ_M,
+    PQ_TRAIN_N,
+    pq_training_sample,
+)
 from simsearch_spark.operators.quantize import QUANT_LEVELS, quantization_error
-from simsearch_spark.queries.ivf import EMB_DIM
 from simsearch_spark.queries.vector import _cosine_sql, _l2_sql
 from simsearch_spark.sources.registry import load_table
 
@@ -224,28 +231,6 @@ SQL_SEMDEDUP = _semdedup_oracle(KM_K, KM_ITERS)
 # -----------------------------------------------------------------------------
 # embed_pq: product quantization (train + encode + reconstruction audit)
 # -----------------------------------------------------------------------------
-
-PQ_M = 4       # subspaces (64-dim -> 16-dim slices)
-PQ_KSUB = 8    # codes per subspace (3 bits; 256 in production = 1 B/subspace)
-PQ_ITERS = 2   # Lloyd iterations per subspace (the KM_ITERS contract)
-#: training-sample bound: codebooks are trained on the PQ_TRAIN_N
-#: LOWEST-id vectors, never the corpus (VERDICT r9: the gated plan must BE
-#: the 100 TB plan — at 10^10 vectors full-frame training would pay
-#: PQ_ITERS x PQ_M corpus scans for codebooks a sample saturates; FAISS
-#: trains on <= 10^6).  Lowest-id keeps the sample deterministic so the
-#: oracle's unrolled chains replay it exactly.  256 is a strict subset of
-#: every fixture (500 @ sf0.01, 2000 @ sf0.1) so the bound is really
-#: exercised, and 32x ksub oversampling per codebook.
-PQ_TRAIN_N = 256
-
-
-def pq_training_sample(emb: DataFrame) -> DataFrame:
-    """The deterministic bounded PQ training frame — the PQ_TRAIN_N
-    lowest-id vectors.  A GlobalLimit after a vec_id sort: the plan is
-    asserted bounded (tests/test_pq.py) so training can never silently
-    regress to a corpus scan."""
-    return emb.orderBy("vec_id").limit(PQ_TRAIN_N).select("vec_id", "embedding")
-
 
 def q_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization audit (operators/pq.py — the IVF-PQ compression

@@ -14,13 +14,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simsearch_spark.operators.ann import ivf_topk
+from simsearch_spark.operators.pq import EMB_DIM
 from simsearch_spark.queries.core import K
 from simsearch_spark.queries.vector import _cosine_sql, _l2_sql
 from simsearch_spark.sources.registry import load_table
 
 IVF_QUERY_ID = 11
 N_PROBE = 2
-EMB_DIM = 64
 
 
 def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,13 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simsearch_spark.queries.cluster import (
-    _l2sq_sql,
+from simsearch_spark.operators.pq import (
     PQ_ITERS,
     PQ_KSUB,
     PQ_M,
     PQ_TRAIN_N,
+    _cent_rows6,
+    _sample_rows,
+    _train_books_residual_rows,
 )
+from simsearch_spark.queries.cluster import _l2sq_sql
 from simsearch_spark.queries.core import K
 from simsearch_spark.queries.ivf import (
     _centroids,
@@ -50,81 +53,6 @@ from simsearch_spark.sources.registry import load_table
 RERANK = 30
 
 _DSUB = EMB_DIM // PQ_M
-
-
-def _centroids6(emb: DataFrame) -> DataFrame:
-    """Per-label centroids with every dimension ROUND-6 PINNED — the
-    residual-mode determinism contract (an unrounded float avg folds
-    differently per plan/engine; rounding pins the doubles both engines
-    subtract).  Same construction as q_embed_outliers' centroid frame."""
-    aggs = [
-        F.round(F.avg(F.col("embedding").getItem(i).cast("double")), 6).alias(f"_c{i}")
-        for i in range(EMB_DIM)
-    ]
-    return (
-        emb.groupBy("label")
-        .agg(*aggs)
-        .select(
-            F.col("label").alias("cluster_id"),
-            F.array(*[F.col(f"_c{i}") for i in range(EMB_DIM)]).alias("centroid"),
-        )
-    )
-
-
-def _cent_rows6(emb: DataFrame) -> list[tuple[int, list[float]]]:
-    """``_centroids6`` collected ONCE as ``[(cluster_id, centroid)]``
-    (bounded: n_cells × dim) — shared by residual training, probe
-    selection, and the residual when-chains, so the centroid aggregation
-    runs exactly one Spark job per query (guide §1.2: it used to rerun
-    under the training passes, the probe collect, and the plan
-    when-chains before the r14 restructure)."""
-    rows = _centroids6(emb).collect()
-    return sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
-
-
-def _sample_rows(emb: DataFrame) -> list:
-    """The bounded lowest-id PQ training sample, collected in one job
-    (≤PQ_TRAIN_N rows; the ``pq_training_sample`` contract with the label
-    kept for residual mode)."""
-    return (
-        emb.orderBy("vec_id")
-        .limit(PQ_TRAIN_N)
-        .select("vec_id", "label", "embedding")
-        .collect()
-    )
-
-
-def _train_books_residual_rows(
-    sample_rows: list, cmap: dict[int, list[float]]
-) -> list[dict[int, list[float]]]:
-    """PQ codebooks over RESIDUALS ``v − centroid(label)`` of the bounded
-    lowest-id sample — the FAISS IndexIVFPQ training recipe, computed
-    driver-side from the collected sample (r14: the residual subtraction
-    and every Lloyd pass are arithmetic over ≤PQ_TRAIN_N·dim doubles; the
-    former broadcast join + persisted frame + per-pass Spark jobs were
-    pure scheduling latency — equivalence pinned in tests/test_pq.py).
-    Rows whose label has no centroid are dropped, exactly like the former
-    inner join."""
-    from simsearch_spark.operators.pq import pq_train_rows
-
-    res_rows = []
-    for r in sample_rows:
-        lab = r["label"]
-        if lab not in cmap:
-            continue
-        vec = [float(x) for x in r["embedding"]]
-        cent = cmap[lab]
-        res_rows.append(
-            (int(r["vec_id"]), [x - m for x, m in zip(vec, cent)])
-        )
-    return pq_train_rows(res_rows, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS)
-
-
-def _train_books_residual(emb: DataFrame, cents: DataFrame):
-    """Compatibility wrapper (tests/tools): collect the centroid frame
-    once and run the driver-local residual trainer."""
-    cmap = {int(r[0]): [float(x) for x in r[1]] for r in cents.collect()}
-    return _train_books_residual_rows(_sample_rows(emb), cmap)
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,7 +77,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ivf_pq_topk(
             emb, "vec_id", "embedding",
             cent_rows, books, qvec, K,
-            n_probe=N_PROBE, rerank=RERANK, assign_col="label", residual=True,
+            n_probe=N_PROBE, rerank=RERANK, assign_col="label",
         )
         # K rows — materialize eagerly so the session-scoped caches can be
         # dropped here instead of leaking across queries (ADVICE r10)
@@ -414,7 +342,7 @@ def _recall_audit_body(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Data
     books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows6))
     ivfpq = ivf_pq_topk(
         emb, "vec_id", "embedding", cent_rows6, books,
-        qvec, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label", residual=True,
+        qvec, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label",
     ).select(F.lit("ivfpq").alias("method"), F.col("vec_id").alias("id"))
     hits = (
         lsh.unionByName(ivf).unionByName(ivfpq)

@@ -145,7 +145,7 @@ def q_pivot_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrow = emb.where(F.col("vec_id") == 7).select("embedding").first()
     qvec = [float(x) for x in qrow.embedding]
 
-    vd = measures.euclidean_distance(F.col("embedding"), F.array(*[F.lit(x) for x in qvec]))
+    vd = measures.euclidean_distance(F.col("embedding"), measures.vec_lit(qvec))
     ld = F.abs(F.col("label").cast("double") - F.lit(PKNN_LABEL_Q))
     sim_v = measures.decayed_similarity(vd, F.lit(PKNN_SCALE_VEC))
     sim_l = measures.decayed_similarity(ld, F.lit(PKNN_SCALE_LBL))

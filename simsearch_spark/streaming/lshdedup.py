@@ -80,12 +80,13 @@ def embedding_candidates_stream(
     distinct candidate set equals the batch band join for ANY micro-batch
     partition (tests/test_lsh_stream.py); scoring stays a batch post-pass
     on raw vectors."""
+    from simsearch_spark.functions.measures import vec_lit
     from simsearch_spark.operators.ann import lcg_hyperplanes, lsh_band_keys
 
     planes = lcg_hyperplanes(dim, n_planes, seed=planes_seed)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     if mean is not None:
-        v = F.zip_with(v, F.lit([float(x) for x in mean]), lambda x, m: x - m)
+        v = F.zip_with(v, vec_lit(mean), lambda x, m: x - m)
     # per-band independent keys — same construction as the batch front
     # (value-identical to the old packed shiftright slicing for
     # bands·band_bits ≤ 63, unbounded beyond), so auto_sign_lsh_params

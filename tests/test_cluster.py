@@ -72,12 +72,20 @@ def test_quantization_error_bound(spark, sf_dir):
 
 def test_assignment_table_equals_literal(spark, sf_dir):
     """assign via broadcast-centroid Arrow kernel == literal-centroid
-    codegen, on raw (unrounded) distances — the bit-identical contract
-    that lets `auto` switch paths as a pure physical-plan knob."""
+    codegen on the same (Lloyd-trained) centroids, on raw (unrounded)
+    distances — the bit-identical contract that lets `kmeans_assign`
+    switch paths at LITERAL_K_MAX as a pure physical-plan knob."""
+    from simsearch_spark.operators.kmeans import (
+        _rounded_means,
+        assign_clusters,
+        assign_clusters_table,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
     for k in (3, 8, 33):
-        lit = kmeans_assign(emb, "vec_id", "embedding", k=k, iters=2, assignment="literal")
-        tab = kmeans_assign(emb, "vec_id", "embedding", k=k, iters=2, assignment="table")
+        cents = _rounded_means(kmeans_assign(emb, "vec_id", "embedding", k=k, iters=1), "embedding")
+        lit = assign_clusters(emb, "embedding", cents)
+        tab = assign_clusters_table(emb, "embedding", cents)
         sel = lambda d: d.select("vec_id", "cluster_id", "dist")
         assert _rows(sel(lit)) == _rows(sel(tab)), f"k={k} path divergence"
 

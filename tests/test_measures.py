@@ -10,6 +10,32 @@ def one(spark, col):
     return spark.range(1).select(col.alias("v")).first().v
 
 
+def test_vec_lit_round_trips_bit_exact(spark):
+    """The shared vector literal renders one SQL ``array(...)``: finite
+    doubles as ``repr`` + ``D``, non-finite ones as ``double('...')``, and
+    every value — signed zero, subnormal, DBL_MAX, ±Inf, NaN — comes back
+    with its exact bits, typed ``array<double>``."""
+    import struct
+
+    vals = [-0.0, 0.0, 5e-324, 1.7976931348623157e308, -1.7976931348623157e308,
+            float("inf"), float("-inf"), float("nan"), 0.1, 1 / 3, 1e16, -2.5e-310]
+    assert measures._sql_double(-0.0) == "-0.0D"
+    assert measures._sql_double(float("nan")) == "double('NaN')"
+    assert measures._sql_double(float("inf")) == "double('Infinity')"
+    assert measures._sql_double(float("-inf")) == "double('-Infinity')"
+    df = spark.range(1).select(measures.vec_lit(vals).alias("v"))
+    assert df.schema["v"].dataType.simpleString() == "array<double>"
+    bits = lambda xs: [struct.pack(">d", x) for x in xs]
+    assert bits(df.first().v) == bits(vals)
+    # finite vectors build the same plan as the per-element F.lit form
+    fin = [v for v in vals if math.isfinite(v)]
+    a = spark.range(1).select(measures.vec_lit(fin).alias("v"))
+    b = spark.range(1).select(F.lit(fin).alias("v"))
+    plan = lambda d: d._jdf.queryExecution().optimizedPlan().toString().split("#")[0]
+    assert a.schema == b.schema and plan(a) == plan(b)
+    assert bits(a.first().v) == bits(b.first().v)
+
+
 def test_abs_diff(spark):
     assert one(spark, measures.abs_diff(F.lit(3.0), F.lit(10.0))) == 7.0
 

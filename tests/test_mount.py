@@ -195,6 +195,57 @@ def test_append_equals_union_mount(spark, sf_dir, tmp_path):
         assert inc == full, t
 
 
+def test_append_codes_equal_numpy_residual_encode(spark, sf_dir, tmp_path):
+    """Fast guard for the shared residual encode (the slow tier's
+    append-equals-union parity covers it end to end): rows appended
+    WITHOUT a cell column route to their nearest mounted centroid and
+    encode against the mounted codebooks, so every delta id's
+    (cell, code_0..code_{m-1}) must equal a numpy recomputation — nearest
+    cell, residual, per-subspace strict-< argmin (lowest id on ties), each
+    distance the sqrt of the ascending-index left fold of squared deltas
+    (``assign_clusters_table``'s order)."""
+    import numpy as np
+
+    from simsearch_spark.mount.artifacts import load_centroid_map, load_codebooks
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cut = 300
+    d = str(tmp_path / "m_codes")
+    docs = spark.createDataFrame([(1, "one doc")], "doc_id long, text string")
+    mount(spark, sf_dir, d, emb_frame=emb.where(F.col("vec_id") < cut),
+          docs_frame=docs, dedup=False)
+    delta = emb.where(F.col("vec_id") >= cut).drop("label")
+    append_rows(spark, d, emb_delta=delta)
+
+    cmap = load_centroid_map(spark, d)
+    books = load_codebooks(spark, d)
+    m = len(books)
+    got = {
+        r.vec_id: (r.cell, *[r[f"code_{j}"] for j in range(m)])
+        for r in spark.read.parquet(f"{d}/pq_codes").where(F.col("vec_id") >= cut).collect()
+    }
+
+    def nearest(x, table):
+        ids = sorted(table)
+        c = np.asarray([table[i] for i in ids], dtype=np.float64)
+        acc = np.zeros(len(ids))
+        for j in range(c.shape[1]):  # ascending-index left fold
+            dj = x[j] - c[:, j]
+            acc += dj * dj
+        return ids[int(np.argmin(np.sqrt(acc)))]  # first minimum: lowest id
+
+    want = {}
+    for r in delta.collect():
+        x = np.asarray(r.embedding, dtype=np.float64)
+        cell = nearest(x, cmap)
+        res = x - np.asarray(cmap[cell], dtype=np.float64)
+        dsub = len(res) // m
+        want[r.vec_id] = (cell, *[
+            nearest(res[j * dsub : (j + 1) * dsub], books[j]) for j in range(m)
+        ])
+    assert len(want) > 0 and got == want
+
+
 def test_delete_tombstones_exclude_from_serving(spark, sf_dir, tmp_path):
     from simsearch_spark.queries.ivf import IVF_QUERY_ID, N_PROBE
     from simsearch_spark.queries.core import K
@@ -221,14 +272,15 @@ def test_served_multi_query_equals_operator(spark, sf_dir, mount_dir):
     itself equals Q single-query runs, tests/test_pq.py) — the full
     train-once/serve-many production shape for a query batch."""
     from simsearch_spark.mount.serve import serve_ivfpq_multi_topk
-    from simsearch_spark.operators.pq import ivf_pq_multi_topk
+    from simsearch_spark.operators.pq import (
+        _cent_rows6,
+        _sample_rows,
+        _train_books_residual_rows,
+        ivf_pq_multi_topk,
+    )
     from simsearch_spark.queries.core import K
     from simsearch_spark.queries.ivf import MULTI_QUERY_IDS, N_PROBE
-    from simsearch_spark.queries.ivfpq import (
-        RERANK,
-        _centroids6,
-        _train_books_residual,
-    )
+    from simsearch_spark.queries.ivfpq import RERANK
 
     emb = load_table(spark, sf_dir, "embeddings")
     qrows = (
@@ -240,9 +292,10 @@ def test_served_multi_query_equals_operator(spark, sf_dir, mount_dir):
     served = serve_ivfpq_multi_topk(
         spark, mount_dir, emb, qs, K, n_probe=N_PROBE, rerank=RERANK
     )
-    cents = _centroids6(emb)
+    cents = _cent_rows6(emb)
     declared = ivf_pq_multi_topk(
-        emb, "vec_id", "embedding", cents, _train_books_residual(emb, cents),
+        emb, "vec_id", "embedding", cents,
+        _train_books_residual_rows(_sample_rows(emb), dict(cents)),
         qs, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label",
     )
     assert _rows(served) == _rows(declared)

@@ -125,7 +125,7 @@ def test_training_sample_is_plan_bounded(spark, sf_dir):
     (bounded rows reach every training pass), and at fixture scale the
     bound is really exercised: sample-trained codebooks differ from
     full-frame-trained ones."""
-    from simsearch_spark.queries.cluster import (
+    from simsearch_spark.operators.pq import (
         PQ_ITERS, PQ_KSUB, PQ_M, PQ_TRAIN_N, pq_training_sample,
     )
     from simsearch_spark.sources.registry import load_table
@@ -147,7 +147,7 @@ def test_ivf_pq_scans_only_probed_cells(spark, sf_dir):
     stay shuffle-free (codegen encode + ADC + TakeOrderedAndProject), and
     every served row must come from a probed cell."""
     from simsearch_spark.operators.pq import ivf_pq_topk
-    from simsearch_spark.queries.cluster import pq_training_sample
+    from simsearch_spark.operators.pq import pq_training_sample
     from simsearch_spark.queries.ivf import _centroids
     from simsearch_spark.sources.registry import load_table
 
@@ -186,7 +186,7 @@ def test_ivf_pq_rerank_monotone_and_exact_at_depth(spark, sf_dir):
     in-cell exact scan is monotone in rerank depth."""
     from simsearch_spark.functions.measures import cosine_similarity
     from simsearch_spark.operators.pq import ivf_pq_topk
-    from simsearch_spark.queries.cluster import pq_training_sample
+    from simsearch_spark.operators.pq import pq_training_sample
     from simsearch_spark.queries.ivf import _centroids
     from simsearch_spark.sources.registry import load_table
 
@@ -267,8 +267,11 @@ def test_encode_passthrough_and_code_range(spark):
 
 def test_ivf_pq_residual_zero_centroids_equals_plain(spark):
     """With all-zero centroids the residual transform is the identity, so
-    residual mode must reproduce plain mode EXACTLY (codes, ADC distances,
-    ordering) — the algebraic pin for the per-cell LUT plumbing."""
+    the residual IVF-PQ path must reproduce plain PQ EXACTLY (codes, ADC
+    distances, ordering) — here the plain composition ``pq_encode`` →
+    ``pq_adc_topk`` over the probed cells → exact cosine rerank — the
+    algebraic pin for the per-cell LUT plumbing."""
+    from simsearch_spark.functions.measures import cosine_similarity
     from simsearch_spark.operators.pq import ivf_pq_topk
 
     rng = random.Random(21)
@@ -281,10 +284,21 @@ def test_ivf_pq_residual_zero_centroids_equals_plain(spark):
     )
     books = pq_train(df, "vec_id", "embedding", m=2, ksub=4, iters=2)
     q = [rng.gauss(0, 1) for _ in range(8)]
-    plain = ivf_pq_topk(df, "vec_id", "embedding", zero_cents, books, q, 7,
-                        n_probe=2, rerank=25, assign_col="cell").collect()
+    # equidistant zero centroids: the two probes are the two lowest cell ids
+    cells = df.where(F.col("cell").isin(0, 1))
+    cand = pq_adc_topk(pq_encode(cells, "vec_id", "embedding", books), "vec_id", books, q, 25)
+    plain = (
+        cand.join(cells, "vec_id")
+        .select(
+            "vec_id", "adc_dist",
+            F.round(cosine_similarity(F.col("embedding"), F.lit(q)), 6).alias("cos_sim"),
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        .limit(7)
+        .collect()
+    )
     res = ivf_pq_topk(df, "vec_id", "embedding", zero_cents, books, q, 7,
-                      n_probe=2, rerank=25, assign_col="cell", residual=True).collect()
+                      n_probe=2, rerank=25, assign_col="cell").collect()
     assert plain == res and len(plain) == 7
 
 
@@ -295,15 +309,17 @@ def test_ivf_pq_residual_exact_at_full_rerank(spark, sf_dir):
     plain codes (the transform is live)."""
     from simsearch_spark.functions.measures import cosine_similarity
     from simsearch_spark.operators.pq import ivf_pq_topk
-    from simsearch_spark.queries.ivfpq import _centroids6, _train_books_residual
+    from simsearch_spark.operators.pq import (
+        _cent_rows6, _sample_rows, _train_books_residual_rows,
+    )
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").persist()
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    cents = _centroids6(emb).persist()
-    books = _train_books_residual(emb, cents)
+    cents = _cent_rows6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), dict(cents))
     cent = sorted(
-        [(r[0], list(r[1])) for r in cents.collect()],
+        cents,
         key=lambda c: (sum((a - b) ** 2 for a, b in zip(q, c[1])), c[0]),
     )
     probed = [cid for cid, _ in cent[:2]]
@@ -321,7 +337,7 @@ def test_ivf_pq_residual_exact_at_full_rerank(spark, sf_dir):
         r.vec_id
         for r in ivf_pq_topk(
             emb, "vec_id", "embedding", cents, books, q, 10,
-            n_probe=2, rerank=in_cells.count(), assign_col="label", residual=True,
+            n_probe=2, rerank=in_cells.count(), assign_col="label",
         ).collect()
     ]
     assert got == exact
@@ -333,7 +349,7 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
     cells — and per-query results must equal the single-query operator run
     Q times (the batch changes the scan count, never the answer)."""
     from simsearch_spark.operators.pq import ivf_pq_multi_topk, ivf_pq_topk
-    from simsearch_spark.queries.cluster import pq_training_sample
+    from simsearch_spark.operators.pq import pq_training_sample
     from simsearch_spark.queries.ivf import _centroids
     from simsearch_spark.sources.registry import load_table
 
@@ -373,7 +389,7 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
     for qid, qv in qs:
         single = ivf_pq_topk(
             emb, "vec_id", "embedding", cents, books, qv, 10,
-            n_probe=2, rerank=30, assign_col="label", residual=True,
+            n_probe=2, rerank=30, assign_col="label",
         ).collect()
         assert got[qid] == [(r.vec_id, r.adc_dist, r.cos_sim) for r in single], qid
 
@@ -385,14 +401,15 @@ def test_driver_local_training_equals_engine_arm(spark, sf_dir):
     Spark job per Lloyd pass), on both the plain and the residual
     training frames.  This is the regression gate for the r14 job-count
     cut across embed_pq / ann_pq_topk / ann_ivfpq_* / mount training."""
-    from simsearch_spark.operators.pq import _pq_train_engine
-    from simsearch_spark.queries.cluster import (
-        PQ_ITERS, PQ_KSUB, PQ_M, pq_training_sample,
-    )
-    from simsearch_spark.queries.ivfpq import (
+    from simsearch_spark.operators.pq import (
+        PQ_ITERS,
+        PQ_KSUB,
+        PQ_M,
         _cent_rows6,
+        _pq_train_engine,
         _sample_rows,
         _train_books_residual_rows,
+        pq_training_sample,
     )
     from simsearch_spark.sources.registry import load_table
 

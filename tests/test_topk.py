@@ -52,6 +52,69 @@ def test_filter_applied_before_scoring(spark, sf_dir):
     assert segs == {"BUILDING"}
 
 
+def test_multi_facet_filters_applied_before_scoring(spark, sf_dir):
+    """Single-table rank aggregation: each facet's pre-filter drops rows
+    before scoring (auto scales and estimated weights included), so the
+    result equals the unfiltered request over the pre-filtered table."""
+    cust = load_table(spark, sf_dir, "customer")
+    seg, nat = "c_mktsegment = 'BUILDING'", "c_nationkey < 12"
+
+    def req(filters):
+        facets = [
+            Facet(name="bal", kind="numerical", value_cols=["c_acctbal"],
+                  query_value=1000.0, filter=filters[0]),
+            Facet(name="nat", kind="numerical", value_cols=["c_nationkey"],
+                  query_value=10.0, filter=filters[1]),
+        ]
+        return SearchRequest(table="customer", key_column="c_custkey", facets=facets, k=6)
+
+    got = multi_facet_topk(cust, req([seg, nat])).collect()
+    want = multi_facet_topk(cust.where(seg).where(nat), req([None, None])).collect()
+    assert got == want and len(got) == 6
+    ids = [r.c_custkey for r in got]
+    kept = cust.where(F.col("c_custkey").isin(ids)).where(seg).where(nat)
+    assert kept.count() == len(ids)
+
+
+def test_multi_source_filter_drops_rows_of_its_facet(spark):
+    """Multi-table path: a facet's pre-filter applies to its own frame —
+    a filtered-out entity is absent from that facet and scores 0 there."""
+    a = spark.createDataFrame([(1, 5.0, "keep"), (2, 5.0, "drop")], "id long, x double, tag string")
+    b = spark.createDataFrame([(2, 7.0), (3, 7.0)], "id long, y double")
+    facets = [
+        Facet(name="fx", kind="numerical", value_cols=["x"], query_value=5.0, scale=1.0,
+              filter="tag = 'keep'"),
+        Facet(name="fy", kind="numerical", value_cols=["y"], query_value=7.0, scale=1.0),
+    ]
+    rows = {r.id: r for r in multi_source_topk({"fx": a, "fy": b}, facets, "id", k=3).collect()}
+    assert rows[2].score == 0.5 and rows[2].fx_sim is None  # unfiltered: 1.0
+    assert rows[1].score == rows[3].score == 0.5
+
+
+def test_search_sql_where_filter_reaches_multi_facet(spark, sf_dir):
+    """``execute_search_sql`` attaches ordinary WHERE predicates to every
+    facet; the multi-facet ranking must honour them."""
+    from simsearch_spark.plans.sql_frontend import execute_search_sql
+
+    cust = load_table(spark, sf_dir, "customer")
+    sql = (
+        "SELECT * FROM customer WHERE c_acctbal ~= 1000 AND c_nationkey ~= 10 "
+        "AND c_mktsegment = 'BUILDING' WEIGHTS 0.5, 0.5 LIMIT 8"
+    )
+    got = execute_search_sql(spark, cust, "customer", sql, "c_custkey").collect()
+    plain = sql.replace("AND c_mktsegment = 'BUILDING' ", "")
+    want = execute_search_sql(
+        spark, cust.where("c_mktsegment = 'BUILDING'"), "customer", plain, "c_custkey"
+    ).collect()
+    assert got == want and len(got) == 8
+    ids = [r.c_custkey for r in got]
+    segs = {
+        r.c_mktsegment
+        for r in cust.where(F.col("c_custkey").isin(ids)).select("c_mktsegment").collect()
+    }
+    assert segs == {"BUILDING"}
+
+
 def test_multi_attr_weight_denominator(spark, sf_dir):
     """NULL facet ⇒ sim 0 but weight stays in denominator (RankAggregator.java:236-259)."""
     df = spark.createDataFrame(

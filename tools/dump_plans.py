@@ -59,28 +59,21 @@ def _fmt(df) -> str:
 def _ivfpq_serving_frame(spark, multi: bool):
     from pyspark.sql import functions as F
 
-    from simsearch_spark.operators.pq import ivf_pq_multi_topk, ivf_pq_topk
+    from simsearch_spark.operators.pq import (
+        _cent_rows6,
+        _sample_rows,
+        _train_books_residual_rows,
+        ivf_pq_multi_topk,
+        ivf_pq_topk,
+    )
     from simsearch_spark.queries.core import K
     from simsearch_spark.queries.ivf import IVF_QUERY_ID, MULTI_QUERY_IDS, N_PROBE
-    from simsearch_spark.queries.ivfpq import RERANK, _centroids6
+    from simsearch_spark.queries.ivfpq import RERANK
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").persist()
-    try:  # r14 API: collected centroid rows + driver-local residual books
-        from simsearch_spark.queries.ivfpq import (
-            _cent_rows6,
-            _sample_rows,
-            _train_books_residual_rows,
-        )
-
-        cent_rows = _cent_rows6(emb)
-        books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows))
-    except ImportError:  # pre-r14 tree (before-plan capture)
-        from simsearch_spark.queries.ivfpq import _train_books_residual
-
-        cents = _centroids6(emb).persist()
-        books = _train_books_residual(emb, cents)
-        cent_rows = cents
+    cent_rows = _cent_rows6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows))
     if multi:
         qrows = (
             emb.where(F.col("vec_id").isin(*MULTI_QUERY_IDS))
@@ -94,7 +87,7 @@ def _ivfpq_serving_frame(spark, multi: bool):
     qvec = [float(x) for x in emb.where(F.col("vec_id") == IVF_QUERY_ID).first().embedding]
     return ivf_pq_topk(
         emb, "vec_id", "embedding", cent_rows, books, qvec, K,
-        n_probe=N_PROBE, rerank=RERANK, assign_col="label", residual=True,
+        n_probe=N_PROBE, rerank=RERANK, assign_col="label",
     )
 
 

@@ -40,7 +40,6 @@ def profile(spark, name: str, runs: int = 2, plans_dir: str | None = None,
     sc = spark.sparkContext
     for i in range(runs):
         sc.setJobDescription(f"{name} run{i}")
-        j0 = len(sc.statusTracker().getActiveJobsIds()) if False else None
         jobs0 = sc._jsc.sc().statusTracker().getJobIdsForGroup(None)
         n0 = len(jobs0)
         t0 = time.perf_counter()
