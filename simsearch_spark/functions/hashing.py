@@ -22,12 +22,20 @@ MOD = 1_000_000_007
 #: modulus for the permutation family (prime)
 PERM_MOD = 2_147_483_647
 
+#: the default MinHash-LSH family — Jaccard threshold, permutations,
+#: bands and the ``perm_params`` seed — shared by the declared dedup
+#: queries, the batch and streaming operators and the mounted dedup index
+MINHASH_T = 0.7
+N_HASHES = 16
+N_BANDS = 4
+MINHASH_SEED = 42
+
 # deterministic (a, b) parameters for the universal-hash permutation family
 # h_i(x) = (a_i * x + b_i) mod PERM_MOD — generated by a fixed LCG so that
 # Spark code, DuckDB oracle, and tests share the literal values.
 
 
-def perm_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
+def perm_params(n: int, seed: int = MINHASH_SEED) -> list[tuple[int, int]]:
     """n (a,b) pairs from a fixed LCG (no randomness at query time —
     FIXTURES.md §F4). a in [1, 9e8] keeps a*h < 9.2e17 inside int64."""
     params = []
@@ -46,7 +54,9 @@ def token_hashes(tokens: Column) -> Column:
     return F.transform(tokens, lambda t: char_fold_hash(t))
 
 
-def minhash_signature(hashes: Column, n_hashes: int = 16, seed: int = 42) -> Column:
+def minhash_signature(
+    hashes: Column, n_hashes: int = N_HASHES, seed: int = MINHASH_SEED
+) -> Column:
     """MinHash signature over a *materialized* array<long> of token hashes:
     for each permutation i, ``min over tokens of (a_i*h + b_i) mod PERM_MOD``.
 
@@ -81,6 +91,19 @@ def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
         sl = F.slice(sig, b * rows_per_band + 1, rows_per_band)
         out.append(F.aggregate(sl, F.lit(0).cast("long"), lambda acc, v: (acc * 31 + v) % F.lit(MOD)))
     return F.array(*out)
+
+
+def band_fold(sig, bands: int) -> list[int]:
+    """:func:`minhash_bands` for one driver-side signature (a sequence of
+    ints): each band's rows folded as ``(acc*31 + v) % MOD``."""
+    rpb = len(sig) // bands
+    out = []
+    for j in range(bands):
+        acc = 0
+        for v in sig[j * rpb : (j + 1) * rpb]:
+            acc = (acc * 31 + int(v)) % MOD
+        out.append(acc)
+    return out
 
 
 #: Knuth multiplicative spread: char-fold base hashes are < 2^30, so their
@@ -141,7 +164,9 @@ def batch_kgram_hashes(texts: list, k: int):
     doc_s, doc_L, doc_nkg, doc_codes = [], [], [], []
     base = 0
     for t in texts:
-        codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
+        # surrogatepass: a lone surrogate (legal in a Python str) encodes
+        # as its own code point, exactly the ord(c) the scalar fold reads
+        codes = np.frombuffer(t.encode("utf-32-le", "surrogatepass"), np.uint32)
         n_chars = len(codes)
         # word boundaries = positions of the literal space (split(" "))
         sp = np.flatnonzero(codes == 32)
@@ -235,7 +260,7 @@ def batch_fold_hashes(strings):
             s = strings[si]
             if s:
                 mat[r, W - len(s):] = np.frombuffer(
-                    s.encode("utf-32-le"), dtype=np.uint32
+                    s.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
                 )
         h = np.zeros(len(sel), dtype=np.int64)
         j = 0

@@ -14,6 +14,7 @@ not user-given (``engine/measure/DecayedSimilarity.java:66-75``,
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,6 +41,19 @@ def _sql_double(x: float) -> str:
     if math.isnan(x):
         return "double('NaN')"
     return "double('Infinity')" if x > 0 else "double('-Infinity')"
+
+
+_Q6 = Decimal("0.000001")
+
+
+def _round6_half_up(x: float) -> float:
+    """``F.round(col, 6)`` on one double, driver-side: Spark rounds
+    ``BigDecimal.valueOf(d)`` — the shortest decimal that round-trips to
+    the same double — HALF_UP at scale 6, and ``Decimal(repr(x))`` is
+    Python's identical shortest round-trip decimal.  A pure-float
+    ``floor(|x|·1e6+0.5)`` emulation is 1 ulp off at 6-decimal
+    representation boundaries (ADVICE r13)."""
+    return float(Decimal(repr(float(x))).quantize(_Q6, rounding=ROUND_HALF_UP))
 
 
 def vec_lit(vals) -> Column:

@@ -259,7 +259,8 @@ def _train_text_family(
     shares the same read.  Returns the lane-ordered language list."""
     from simsearch_spark.functions.langid import PROFILES, _langs_of
     from simsearch_spark.functions.text import ws_tokens
-    from simsearch_spark.queries.vocab import lm_count_tables, lm_doc_bigrams
+    from simsearch_spark.operators.bm25 import bm25_doc_freq
+    from simsearch_spark.operators.lm import lm_count_tables, lm_doc_bigrams
 
     prof = PROFILES if profiles is None else profiles
     langs = _langs_of(profiles)
@@ -296,15 +297,7 @@ def _train_text_family(
             # appends re-derive v from the merged token set
             # (maintain.append_rows)
             (docs.select(F.explode(toks).alias("tok")).distinct(), "lm_tokens", None),
-            (
-                tdocs.select(
-                    "doc_id", F.explode(F.array_distinct("toks")).alias("term")
-                )
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df")),
-                "bm25_df",
-                None,
-            ),
+            (bm25_doc_freq(tdocs), "bm25_df", None),
             (
                 tdocs.agg(
                     F.count(F.lit(1)).alias("n_docs"),
@@ -327,22 +320,33 @@ def _train_text_family(
     return list(langs)
 
 
+#: the dedup-index keys a mount freezes in its manifest and a refresh
+#: carries into the next generation
+DEDUP_FAMILY_KEYS = (
+    "id_col", "text_col", "threshold", "n_hashes", "bands",
+    "shingle_n", "seed", "bucket_cap", "hot_mode",
+)
+
+
+def _carried_dedup_params(manifest: dict) -> dict | None:
+    """The frozen dedup family of ``manifest`` as ``mount(dedup_params=)``
+    takes it, or None when the mount has no dedup index."""
+    dd = manifest.get("dedup")
+    return {k: dd[k] for k in DEDUP_FAMILY_KEYS if k in dd} if dd else None
+
+
 def _dedup_family_params(dedup_params: dict | None) -> dict:
     """The frozen MinHash family the dedup index is built with: module
     defaults overlaid with the caller's (or the previous generation's)
     overrides, unknown keys rejected loudly."""
-    from simsearch_spark.queries.pipeline import MINHASH_T, N_BANDS, N_HASHES
+    from simsearch_spark.functions.hashing import MINHASH_T, N_BANDS, N_HASHES
 
     dp = {"threshold": MINHASH_T, "n_hashes": N_HASHES, "bands": N_BANDS}
     if dedup_params:
-        allowed = {
-            "id_col", "text_col", "threshold", "n_hashes", "bands",
-            "shingle_n", "seed", "bucket_cap", "hot_mode",
-            # layout fan-outs: auto-derived from corpus size when absent
-            # (r15); a refresh deliberately does NOT carry them so the
-            # new generation re-sizes for the refreshed corpus
-            "n_bkt", "n_sbkt",
-        }
+        # plus the layout fan-outs: auto-derived from corpus size when
+        # absent (r15); a refresh deliberately does NOT carry them so the
+        # new generation re-sizes for the refreshed corpus
+        allowed = {*DEDUP_FAMILY_KEYS, "n_bkt", "n_sbkt"}
         bad = set(dedup_params) - allowed
         if bad:
             raise ValueError(f"dedup_params keys not settable: {sorted(bad)}")
@@ -472,6 +476,16 @@ def load_pivots(spark: SparkSession, mount_dir: str) -> list:
         (int(r["pivot_id"]), [float(x) for x in r["vector"]])
         for r in sorted(rows, key=lambda r: int(r["pos"]))
     ]
+
+
+def load_lm_tables(spark: SparkSession, mount_dir: str):
+    """The mounted LM count tables ``(cb, cu, vocab)`` in
+    ``lm_count_tables``'s shape — lazy reads, joined per query by
+    ``operators.lm.lm_score``."""
+    return tuple(
+        spark.read.parquet(os.path.join(mount_dir, name))
+        for name in ("lm_bigrams", "lm_ctx", "lm_vocab")
+    )
 
 
 def load_profiles(spark: SparkSession, mount_dir: str) -> dict[str, dict[str, int]]:

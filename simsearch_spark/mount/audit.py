@@ -45,7 +45,12 @@ from simsearch_spark.mount.lock import (
     plant_lock,
     restore_crashed_swap,
 )
-from simsearch_spark.mount.artifacts import load_manifest, mount
+from simsearch_spark.mount.artifacts import (
+    _carried_dedup_params,
+    load_lm_tables,
+    load_manifest,
+    mount,
+)
 
 __all__ = ["audit_drift", "audit_dedup", "audit_text", "auto_maintain", "refresh"]
 
@@ -83,28 +88,6 @@ def _brute_multi_topk(
     return out
 
 
-def _round6_half_up(arr):
-    """``F.round(col, 6)`` parity for a driver-resident numpy vector:
-    Spark rounds through ``BigDecimal.valueOf(double)`` — the shortest
-    decimal representation that round-trips to the same double — then
-    HALF_UP at scale 6.  ``Decimal(repr(x))`` is Python's identical
-    shortest round-trip decimal, so quantizing it HALF_UP cannot differ
-    from the engine arm by the 1 ulp the pure-float emulation allowed
-    (ADVICE r13).  Cost is a Python loop, bounded by the audit's sampled
-    universe (never corpus-sized)."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q6 = Decimal("0.000001")
-    return np.array(
-        [
-            float(Decimal(repr(float(c))).quantize(q6, rounding=ROUND_HALF_UP))
-            for c in arr
-        ],
-        dtype=np.float64,
-    )
-
-
 def _brute_local(
     rows, qs: list[tuple[int, list[float]]], k: int, id_col: str, vec_col: str
 ) -> dict[int, list[int]]:
@@ -112,6 +95,8 @@ def _brute_local(
     sampled arm) — numpy matrix product, same (round(cos, 6) desc, id
     asc) ordering as ``_brute_multi_topk``."""
     import numpy as np
+
+    from simsearch_spark.functions.measures import _round6_half_up
 
     ids = np.array([int(r[id_col]) for r in rows], dtype=np.int64)
     mat = np.array([[float(x) for x in r[vec_col]] for r in rows], dtype=np.float64)
@@ -121,14 +106,9 @@ def _brute_local(
         q = np.asarray(qv, dtype=np.float64)
         qn = float(np.sqrt((q * q).sum()))
         cos = (mat @ q) / (norms * qn)
-        # HALF_UP at 6 decimals, the engine-wide score contract.  Spark's
-        # round() on a double goes through BigDecimal.valueOf — i.e. the
-        # SHORTEST-DECIMAL representation of the exact double — so the
-        # floor(|x|·1e6+0.5) emulation could disagree by 1 ulp at
-        # 6-decimal representation boundaries (ADVICE r13).  Decimal(
-        # repr(x)) is Python's same shortest round-trip decimal; HALF_UP
-        # quantize over it is bit-for-bit the Spark contract.
-        cos = _round6_half_up(cos)
+        # HALF_UP at 6 decimals, bit-for-bit Spark's round(x, 6) — a Python
+        # loop, bounded by the audit's sampled universe (never corpus-sized)
+        cos = np.array([_round6_half_up(c) for c in cos], dtype=np.float64)
         order = np.lexsort((ids, -cos))[: int(k)]
         out[int(qid)] = [int(i) for i in ids[order]]
     return out
@@ -302,31 +282,25 @@ def audit_dedup(
     # band_hash-sorted per directory) — the append path's scan shape, so
     # the audit stays bounded at any corpus size.  An id-only filter
     # would full-scan the band table: ids are not the sort key.
-    from simsearch_spark.functions.hashing import MOD, PERM_MOD, perm_params
+    from simsearch_spark.functions.hashing import (
+        MINHASH_SEED,
+        PERM_MOD,
+        band_fold,
+        batch_fold_hashes,
+        perm_params,
+    )
     from simsearch_spark.mount.dedup import MAX_IN_LITERALS, N_BKT
 
     rows_per_band = n_hashes // bands
-    params = perm_params(n_hashes, int(dd.get("seed", 42)))
+    params = perm_params(n_hashes, int(dd.get("seed", MINHASH_SEED)))
     n_bkt = int(dd.get("n_bkt", N_BKT))
 
     def _doc_bands(shs) -> list[int]:
-        if shs:
-            hs = []
-            for s in shs:
-                h = 0
-                for c in s:
-                    h = (h * 31 + ord(c)) % MOD
-                hs.append(h)
-            sig = [min((a * h + b) % PERM_MOD for h in hs) for a, b in params]
-        else:
-            sig = [PERM_MOD] * n_hashes
-        out = []
-        for j in range(bands):
-            acc = 0
-            for r in range(rows_per_band):
-                acc = (acc * 31 + sig[j * rows_per_band + r]) % MOD
-            out.append(acc)
-        return out
+        hs = [int(h) for h in batch_fold_hashes(list(shs))]
+        if not hs:
+            return band_fold([PERM_MOD] * n_hashes, bands)
+        sig = [min((a * h + b) % PERM_MOD for h in hs) for a, b in params]
+        return band_fold(sig, bands)
 
     expected = {i: _doc_bands(sets[i]) for i in ids}
     hashes = sorted({h for bs in expected.values() for h in bs})
@@ -417,7 +391,7 @@ def _sample_lm_stats(
     collapse means the vocabulary/LM no longer describe incoming data.
     A bigram-free sample is NO-SIGNAL, not drift: both fields are None
     (the audit_dedup ``recall=None`` convention)."""
-    from simsearch_spark.queries.vocab import lm_doc_bigrams, lm_score
+    from simsearch_spark.operators.lm import lm_doc_bigrams, lm_score
 
     sample = content_sample(
         docs.where(F.col(text_col).isNotNull()).select(
@@ -428,10 +402,7 @@ def _sample_lm_stats(
     )
     bgc = lm_doc_bigrams(sample).persist()
     try:
-        cb = spark.read.parquet(os.path.join(art_dir, "lm_bigrams"))
-        cu = spark.read.parquet(os.path.join(art_dir, "lm_ctx"))
-        vocab = spark.read.parquet(os.path.join(art_dir, "lm_vocab"))
-        scored = lm_score(sample, bgc, cb, cu, vocab)
+        scored = lm_score(sample, bgc, *load_lm_tables(spark, art_dir))
         row = (
             scored.where(F.col("n_bigrams") > 0)
             .agg(
@@ -581,9 +552,6 @@ def _refresh_impl(
     nxt = mount_dir.rstrip("/") + "__next"
     if os.path.isdir(nxt):
         shutil.rmtree(nxt)  # a crashed earlier refresh left debris
-    # carry the mounted dedup hash family into the new generation — a
-    # refresh must never silently revert a custom family to the module
-    # defaults (self-review r12); an explicit dedup_params still wins
     if "profiles" not in mount_kwargs and os.path.isdir(
         os.path.join(mount_dir, "langid_profiles")
     ):
@@ -593,16 +561,10 @@ def _refresh_impl(
         from simsearch_spark.mount.artifacts import load_profiles
 
         mount_kwargs["profiles"] = load_profiles(spark, mount_dir)
-    if "dedup_params" not in mount_kwargs and old_manifest.get("dedup"):
-        dd = old_manifest["dedup"]
-        mount_kwargs["dedup_params"] = {
-            k: dd[k]
-            for k in (
-                "id_col", "text_col", "threshold", "n_hashes", "bands",
-                "shingle_n", "seed", "bucket_cap", "hot_mode",
-            )
-            if k in dd
-        }
+    # carry the mounted dedup hash family into the new generation — a
+    # refresh must never silently revert a custom family to the module
+    # defaults (self-review r12); an explicit dedup_params still wins
+    mount_kwargs.setdefault("dedup_params", _carried_dedup_params(old_manifest))
     mount(
         spark, src, nxt,
         emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
@@ -803,17 +765,8 @@ def _refresh_families(
                     from simsearch_spark.mount.dedup import mount_dedup
 
                     dp = mount_kwargs.get("dedup_params")
-                    if dp is None and old_manifest.get("dedup"):
-                        dd = old_manifest["dedup"]
-                        dp = {
-                            k: dd[k]
-                            for k in (
-                                "id_col", "text_col", "threshold", "n_hashes",
-                                "bands", "shingle_n", "seed", "bucket_cap",
-                                "hot_mode",
-                            )
-                            if k in dd
-                        }
+                    if dp is None:
+                        dp = _carried_dedup_params(old_manifest)
                     n_docs_old = int(
                         old_manifest.get("dedup", {}).get("n_docs", 0)
                     )

@@ -30,6 +30,13 @@ from pyspark.sql import functions as F
 
 from simsearch_spark.mount.lock import locked
 from simsearch_spark.mount.artifacts import _write, load_manifest
+from simsearch_spark.operators.bpe import (
+    BPE_MERGES,
+    apply_bpe,
+    bpe_encode_stats_frame,
+    learn_bpe_merges,
+    token_chars,
+)
 
 __all__ = [
     "mount_bpe",
@@ -42,6 +49,15 @@ __all__ = [
 #: bounded sample size for the mount-time baseline and the drift audit —
 #: the ``corpus_sample_n`` discipline (hash-lowest ids, map-side top-n)
 AUDIT_SAMPLE_N = 256
+
+
+def _bpe_block(mount_dir: str, text_col: str | None) -> tuple[dict, str]:
+    """The mount's frozen ``bpe`` manifest block and the text column to
+    encode (default: the column the merges were trained on)."""
+    bp = load_manifest(mount_dir).get("bpe")
+    if not bp:
+        raise ValueError("mount has no BPE artifacts — run mount_bpe first")
+    return bp, bp["text_col"] if text_col is None else text_col
 
 
 def _sample_cpt(
@@ -60,19 +76,12 @@ def _sample_cpt(
     auto_maintain destructively retrain on a blanked frame — review
     r14)."""
     from simsearch_spark.mount.audit import content_sample
-    from simsearch_spark.operators.bpe import apply_bpe
 
     sample = content_sample(docs.select(F.col(text_col)), text_col, sample_n)
     row = (
         apply_bpe(sample, text_col, merges)
         .select(
-            F.sum(
-                F.aggregate(
-                    F.transform(F.col("bpe_tokens"), F.length),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-            ).alias("chars"),
+            F.sum(token_chars(F.col("bpe_tokens"))).alias("chars"),
             F.sum(F.size("bpe_tokens")).alias("toks"),
         )
         .first()
@@ -99,11 +108,7 @@ def audit_bpe(
     flat in corpus size.  Returns ``{"cpt": float, "baseline_cpt":
     float|None, "ratio": float|None, "sample_n": int}`` — ``ratio`` is
     None for pre-baseline mounts (report, not an error)."""
-    manifest = load_manifest(mount_dir)
-    bp = manifest.get("bpe")
-    if not bp:
-        raise ValueError("mount has no BPE artifacts — run mount_bpe first")
-    col = bp["text_col"] if text_col is None else text_col
+    bp, col = _bpe_block(mount_dir, text_col)
     cpt = _sample_cpt(
         spark,
         docs.where(F.col(col).isNotNull()),
@@ -137,11 +142,8 @@ def mount_bpe(
     ``bpe_merges`` artifact (merge_rank, left, right, pair_count) with
     the training parameters frozen in the manifest — the tokenizer dual
     of ``mount_dedup``.  Default ``n_merges`` is the declared-query
-    budget (``queries.vocab.BPE_MERGES``) so a default mount's encode is
+    budget (``operators.bpe.BPE_MERGES``) so a default mount's encode is
     parity-equal to the self-contained ``bpe_token_stats`` query."""
-    from simsearch_spark.operators.bpe import learn_bpe_merges
-    from simsearch_spark.queries.vocab import BPE_MERGES
-
     n = int(BPE_MERGES if n_merges is None else n_merges)
     os.makedirs(mount_dir, exist_ok=True)
     live = docs.where(F.col(text_col).isNotNull())
@@ -205,13 +207,7 @@ def serve_bpe_encode(
     production encode: one bounded artifact read, then the row-local
     Arrow kernel over the caller's frame (no shuffle, no retrain).
     ``text_col`` defaults to the column the merges were trained on."""
-    from simsearch_spark.operators.bpe import apply_bpe
-
-    manifest = load_manifest(mount_dir)
-    bp = manifest.get("bpe")
-    if not bp:
-        raise ValueError("mount has no BPE artifacts — run mount_bpe first")
-    col = bp["text_col"] if text_col is None else text_col
+    _bp, col = _bpe_block(mount_dir, text_col)
     return apply_bpe(docs, col, load_merges(spark, mount_dir), out_col=out_col)
 
 
@@ -229,28 +225,10 @@ def bpe_encode_stats(
     chars_per_token on new data means the merges no longer fit it).
     Same aggregate shape as the self-contained ``bpe_token_stats`` query,
     so a default mount over the training corpus is parity-equal to it."""
-    manifest = load_manifest(mount_dir)
-    bp = manifest.get("bpe")
-    if not bp:
-        raise ValueError("mount has no BPE artifacts — run mount_bpe first")
-    col = bp["text_col"] if text_col is None else text_col
+    _bp, col = _bpe_block(mount_dir, text_col)
     toks = serve_bpe_encode(
         spark, mount_dir,
         docs.where(F.col(col).isNotNull()).select(group_col, col),
         text_col=col,
     )
-    return toks.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("bpe_tokens")).alias("n_subwords"),
-        F.round(
-            F.sum(
-                F.aggregate(
-                    F.transform(F.col("bpe_tokens"), F.length),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-            ).cast("double")
-            / F.sum(F.size("bpe_tokens")),
-            6,
-        ).alias("chars_per_token"),
-    )
+    return bpe_encode_stats_frame(toks, group_col)

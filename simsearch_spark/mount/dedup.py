@@ -53,6 +53,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simsearch_spark.functions.hashing import MINHASH_SEED, MINHASH_T, N_BANDS, N_HASHES
 from simsearch_spark.mount.artifacts import _write, load_manifest
 from simsearch_spark.mount.lock import locked, mount_write_lock
 from simsearch_spark.operators.dedup import (
@@ -188,11 +189,11 @@ def mount_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    threshold: float = 0.7,
-    n_hashes: int = 16,
-    bands: int = 4,
+    threshold: float = MINHASH_T,
+    n_hashes: int = N_HASHES,
+    bands: int = N_BANDS,
     shingle_n: int = 3,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     bucket_cap: int | None = LSH_BUCKET_CAP,
     hot_mode: str = "cap",
     n_bkt: int | None = None,

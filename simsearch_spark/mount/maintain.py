@@ -306,7 +306,8 @@ def append_rows(
 
     if docs_delta is not None:
         from simsearch_spark.functions.text import ws_tokens
-        from simsearch_spark.queries.vocab import lm_doc_bigrams
+        from simsearch_spark.operators.bm25 import bm25_doc_freq
+        from simsearch_spark.operators.lm import lm_doc_bigrams
 
         docs = docs_delta.where(F.col("text").isNotNull())
         toks = ws_tokens(F.col("text"))
@@ -318,13 +319,7 @@ def append_rows(
         p_df = os.path.join(mount_dir, "bm25_df")
         merged_df = (
             spark.read.parquet(p_df)
-            .unionByName(
-                tdocs.select(
-                    "doc_id", F.explode(F.array_distinct("toks")).alias("term")
-                )
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
-            )
+            .unionByName(bm25_doc_freq(tdocs))
             .groupBy("term")
             .agg(F.sum("df").alias("df"))
         )
@@ -349,22 +344,15 @@ def append_rows(
         # distinct token set (countDistinct is not mergeable from counts)
         bgc = lm_doc_bigrams(docs).persist()
         try:
-            p_cb = os.path.join(mount_dir, "lm_bigrams")
-            _swap_in(
-                spark.read.parquet(p_cb)
-                .unionByName(bgc.groupBy("ngram").agg(F.sum("m").alias("cb")))
-                .groupBy("ngram")
-                .agg(F.sum("cb").alias("cb")),
-                p_cb,
-            )
-            p_cu = os.path.join(mount_dir, "lm_ctx")
-            _swap_in(
-                spark.read.parquet(p_cu)
-                .unionByName(bgc.groupBy("ctx").agg(F.sum("m").alias("cu")))
-                .groupBy("ctx")
-                .agg(F.sum("cu").alias("cu")),
-                p_cu,
-            )
+            for name, key, c in (("lm_bigrams", "ngram", "cb"), ("lm_ctx", "ctx", "cu")):
+                p = os.path.join(mount_dir, name)
+                _swap_in(
+                    spark.read.parquet(p)
+                    .unionByName(bgc.groupBy(key).agg(F.sum("m").alias(c)))
+                    .groupBy(key)
+                    .agg(F.sum(c).alias(c)),
+                    p,
+                )
         finally:
             bgc.unpersist()
         p_tok = os.path.join(mount_dir, "lm_tokens")

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from simsearch_spark.mount.artifacts import (
     load_centroid_map,
     load_codebooks,
+    load_lm_tables,
     load_pivots,
     load_profiles,
 )
@@ -443,10 +444,6 @@ def serve_lm_perplexity(
     fan-out + the LM joins — the corpus-wide count aggregation is the
     mount's job.  Same arithmetic as ``q_lm_perplexity`` (micro-nat
     integer pinning and all)."""
-    from simsearch_spark.queries.vocab import lm_doc_bigrams, lm_score
+    from simsearch_spark.operators.lm import lm_doc_bigrams, lm_score
 
-    bgc = lm_doc_bigrams(docs)
-    cb = spark.read.parquet(os.path.join(mount_dir, "lm_bigrams"))
-    cu = spark.read.parquet(os.path.join(mount_dir, "lm_ctx"))
-    vocab = spark.read.parquet(os.path.join(mount_dir, "lm_vocab"))
-    return lm_score(docs, bgc, cb, cu, vocab)
+    return lm_score(docs, lm_doc_bigrams(docs), *load_lm_tables(spark, mount_dir))

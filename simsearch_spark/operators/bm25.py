@@ -39,6 +39,17 @@ def bm25_idf(n_docs: int, df_t: int) -> float:
     return math.log((n_docs - df_t + 0.5) / (df_t + 0.5) + 1.0)
 
 
+def bm25_doc_freq(tdocs: DataFrame) -> DataFrame:
+    """(term, df) over a (doc_id, toks) frame: the number of documents
+    holding each term — the mounted ``bm25_df`` artifact and each
+    append's delta to it."""
+    return (
+        tdocs.select("doc_id", F.explode(F.array_distinct("toks")).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+
+
 def bm25_score_topk(
     df: DataFrame,
     id_col: str,

@@ -36,11 +36,14 @@ from pyspark.sql import functions as F
 
 from simsearch_spark.functions.text import ws_tokens
 
+#: the merge budget of the declared BPE queries and of a default BPE mount
+BPE_MERGES = 8
+
 
 def _adjacent_pairs(syms: Column) -> Column:
     """Array of (l, r) structs for each adjacent symbol pair — zip of two
     shifted slices, linear per row (sequence+element_at would be quadratic;
-    see queries/vocab.py's bigram note)."""
+    see the bigram note in operators/lm.py ``lm_doc_bigrams``)."""
     n1 = F.greatest(F.size(syms) - 1, F.lit(0))
     return F.zip_with(
         F.slice(syms, 1, n1),
@@ -241,3 +244,25 @@ def apply_bpe(
         f"`{f.name}` {f.dataType.simpleString()}" for f in docs.schema.fields
     )
     return docs.mapInPandas(proc, f"{schema}, {out_col} array<string>")
+
+
+def token_chars(toks: Column) -> Column:
+    """Total characters of an ``array<string>`` of subword tokens."""
+    return F.aggregate(
+        F.transform(toks, F.length), F.lit(0).cast("long"), lambda a, x: a + x
+    )
+
+
+def bpe_encode_stats_frame(toks: DataFrame, group_col: str) -> DataFrame:
+    """Per-``group_col`` statistics of an ``apply_bpe`` frame: document
+    count, total subword tokens, and mean chars-per-token (the compression
+    the merges buy) — shared by the declared ``bpe_token_stats`` query and
+    the mounted ``bpe_encode_stats``."""
+    n_sub = F.sum(F.size("bpe_tokens"))
+    return toks.groupBy(group_col).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        n_sub.alias("n_subwords"),
+        F.round(
+            F.sum(token_chars(F.col("bpe_tokens"))).cast("double") / n_sub, 6
+        ).alias("chars_per_token"),
+    )

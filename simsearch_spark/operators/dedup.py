@@ -26,7 +26,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from simsearch_spark.functions import measures
-from simsearch_spark.functions.hashing import hamming64
+from simsearch_spark.functions.hashing import (
+    MINHASH_SEED,
+    MINHASH_T,
+    N_BANDS,
+    N_HASHES,
+    PERM_MOD,
+    band_fold,
+    batch_kgram_hashes,
+    hamming64,
+    perm_params,
+)
 from simsearch_spark.functions.text import doc_fingerprint
 from simsearch_spark.operators.setsim import jaccard_self_join
 
@@ -110,8 +120,6 @@ def simhash_frame(
     id_dtype = dict(df.dtypes)[id_col]
     jbits = np.arange(bits, dtype=np.uint64)
 
-    from simsearch_spark.functions.hashing import batch_kgram_hashes
-
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             texts, nonempty = [], []
@@ -163,10 +171,10 @@ def minhash_banded_frame(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 16,
-    bands: int = 4,
+    n_hashes: int = N_HASHES,
+    bands: int = N_BANDS,
     shingle_n: int = 3,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     fanout: bool = True,
 ) -> DataFrame:
     """(id, shingles, bands): the MinHash-LSH signature table in ONE Arrow
@@ -185,8 +193,6 @@ def minhash_banded_frame(
     import numpy as np
     import pandas as pd
 
-    from simsearch_spark.functions.hashing import MOD as _MOD
-    from simsearch_spark.functions.hashing import PERM_MOD, perm_params
     from simsearch_spark.operators.fanout import fanout_for_kernel
 
     # the fused shingle/permutation kernel is the corpus pass this table
@@ -196,18 +202,11 @@ def minhash_banded_frame(
     if fanout:
         df = fanout_for_kernel(df, id_col)
     id_dtype = dict(df.dtypes)[id_col]
-    rows_per_band = n_hashes // bands
     params = perm_params(n_hashes, seed)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
 
-    from simsearch_spark.functions.hashing import batch_kgram_hashes
-
-    def _band_fold(sig, j, rpb):
-        acc = 0
-        for r in range(rpb):
-            acc = (acc * 31 + int(sig[j * rpb + r])) % _MOD
-        return acc
+    empty_bands = band_fold([PERM_MOD] * n_hashes, bands)
 
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -230,10 +229,7 @@ def minhash_banded_frame(
             for ok in nonempty:
                 if not ok:
                     sh_out.append([])
-                    band_out.append(
-                        [_band_fold(np.full(n_hashes, PERM_MOD, dtype=np.int64),
-                                    j, rows_per_band) for j in range(bands)]
-                    )
+                    band_out.append(empty_bands)
                     continue
                 t = next(ti)
                 words = t.split(" ")
@@ -245,9 +241,8 @@ def minhash_banded_frame(
                 # (n_hashes, n_kgrams) permuted hashes; a*h ≤ 9e8·1e9 < 2^63
                 perm = (a_vec * hs + b_vec) % PERM_MOD
                 sig = perm.min(axis=1)
-                bvals = [_band_fold(sig, j, rows_per_band) for j in range(bands)]
                 sh_out.append(shingles)
-                band_out.append(bvals)
+                band_out.append(band_fold(sig, bands))
             yield pd.DataFrame({id_col: pdf[id_col], "shingles": sh_out, "bands": band_out})
 
     return df.select(id_col, text_col).mapInPandas(
@@ -433,9 +428,9 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.7,
-    n_hashes: int = 16,
-    bands: int = 4,
+    threshold: float = MINHASH_T,
+    n_hashes: int = N_HASHES,
+    bands: int = N_BANDS,
     shingle_n: int = 3,
     auto_params: bool = False,
     bucket_cap: int | None = LSH_BUCKET_CAP,

@@ -38,12 +38,11 @@ path re-scores exact vectors); PQ extends the LLM-pipeline ANN family
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simsearch_spark.functions.measures import (
+    _round6_half_up,
     cosine_similarity,
     euclidean_distance,
     vec_lit,
@@ -233,24 +232,6 @@ def _train_books_residual_rows(
     return pq_train_rows(res_rows, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS)
 
 
-def _probe_dim(df: DataFrame, vec_col: str) -> int:
-    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
-    if row is None:
-        raise ValueError("cannot probe vector width of an empty frame")
-    return int(row[0])
-
-
-_Q6 = Decimal("0.000001")
-
-
-def _round6_half_up(x: float) -> float:
-    """Replicate ``F.round(col, 6)`` on doubles driver-side: Spark rounds
-    ``BigDecimal(Double.toString(d))`` HALF_UP at scale 6, and
-    ``Decimal(repr(x))`` is Python's identical shortest round-trip
-    decimal (the mount/audit.py ADVICE-r13 contract)."""
-    return float(Decimal(repr(float(x))).quantize(_Q6, rounding=ROUND_HALF_UP))
-
-
 def pq_train_rows(
     rows: list[tuple],
     m: int = 4,
@@ -352,92 +333,6 @@ def pq_train(
     """
     rows = df.select(id_col, vec_col).collect()
     return pq_train_rows([(r[0], list(r[1])) for r in rows], m=m, ksub=ksub, iters=iters)
-
-
-def _pq_train_engine(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 4,
-    ksub: int = 8,
-    iters: int = 2,
-) -> list[dict[int, list[float]]]:
-    """The pre-r14 in-engine training arm (one exploded frame, each Lloyd
-    pass one batched Spark job).  Kept as the equivalence oracle for
-    ``pq_train_rows`` — tests/test_pq.py pins both arms equal per fixture;
-    production paths all use the driver-local arm.
-    """
-    dim = _probe_dim(df, vec_col)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    vec = F.col(vec_col)
-
-    # one job: all m seed sets (rounded IN-ENGINE — F.round is HALF_UP;
-    # Python's round() is banker's and must never touch these values)
-    seed_rows = (
-        df.orderBy(id_col)
-        .limit(ksub)
-        .select(
-            *[
-                F.transform(
-                    F.slice(vec, j * dsub + 1, dsub),
-                    lambda x: F.round(x.cast("double"), 6),
-                ).alias(f"s{j}")
-                for j in range(m)
-            ]
-        )
-        .collect()
-    )
-    codebooks: list[dict[int, list[float]]] = [
-        {i: [float(v) for v in r[f"s{j}"]] for i, r in enumerate(seed_rows)}
-        for j in range(m)
-    ]
-
-    # (id, j, slice) exploded once; every pass groups on (j, cluster, dim)
-    flat = df.select(
-        F.col(id_col),
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice(vec, j * dsub + 1, dsub).alias("_sub"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ),
-    )
-    for _ in range(iters):
-        # per-row argmin against the row's OWN subspace codebook, chosen
-        # by a when-chain on j (each distance expression once)
-        best = None
-        for j in reversed(range(m)):
-            bj = nearest_centroid(F.col("_sub"), codebooks[j])
-            best = bj if best is None else F.when(F.col("j") == j, bj).otherwise(best)
-        rows = (
-            flat.withColumn("cluster_id", best["cluster_id"])
-            .select("j", "cluster_id", F.posexplode(F.col("_sub")).alias("pos", "v"))
-            .groupBy("j", "cluster_id", "pos")
-            .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("mv"))
-            .collect()
-        )
-        means: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            means.setdefault((int(r["j"]), int(r["cluster_id"])), {})[int(r["pos"])] = float(r["mv"])
-        codebooks = [
-            {
-                cid: (
-                    [means[(j, cid)][p] for p in sorted(means[(j, cid)])]
-                    if (j, cid) in means
-                    else old  # empty cluster keeps its previous centroid
-                )
-                for cid, old in codebooks[j].items()
-            }
-            for j in range(m)
-        ]
-    return codebooks
 
 
 def pq_encode(

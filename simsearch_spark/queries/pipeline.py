@@ -13,7 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simsearch_spark.functions.hashing import MOD, PERM_MOD, perm_params
+from simsearch_spark.functions.hashing import (
+    MINHASH_T,
+    MOD,
+    N_BANDS,
+    N_HASHES,
+    PERM_MOD,
+    perm_params,
+)
 from simsearch_spark.functions.text import (
     LANG_STOPWORDS,
     bpe_ish_token_count,
@@ -29,16 +36,14 @@ from simsearch_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from simsearch_spark.operators.pq import EMB_DIM
 from simsearch_spark.queries.core import K
 from simsearch_spark.queries.vector import _cosine_sql
 from simsearch_spark.sources.registry import load_table
 
-MINHASH_T = 0.7
 NGRAM_T = 0.7
 SIMHASH_R = 6
 COSINE_T = 0.45
-N_HASHES = 16
-N_BANDS = 4
 SIMHASH_BITS = 32  # of the SPREAD base hash — all 32 entropic (hashing.SPREAD_MULT)
 
 # -----------------------------------------------------------------------------
@@ -381,7 +386,6 @@ ORDER BY round({_cosine_sql('e.embedding', 'qv')}, 6) DESC, e.vec_id LIMIT {K}
 # -----------------------------------------------------------------------------
 
 N_PLANES = 8
-EMB_DIM = 64
 PLANES = lcg_hyperplanes(EMB_DIM, N_PLANES)
 
 

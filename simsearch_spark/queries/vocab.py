@@ -1,7 +1,13 @@
 """Declared queries: corpus vocabulary statistics, TF-IDF keyword
-extraction, and PII scrubbing — text-analysis extensions of the
+extraction, bigram-LM perplexity and the quality filter built on it, PII
+scrubbing, and BPE tokenizer training — text-analysis extensions of the
 LLM-pipeline surface (no reference counterpart; the reference's text
 operator is the q-gram similarity facet, ``DataIngestor.java:151-204``).
+
+The LM and BPE machinery is library code shared with ``mount/``: the
+bigram LM (counts, tables, scoring) lives in ``operators/lm.py`` and the
+BPE trainer with its merge budget ``BPE_MERGES`` in ``operators/bpe.py``.
+This module only declares the queries over them and their DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -20,7 +26,20 @@ from simsearch_spark.functions.pii import (
     redact,
 )
 from simsearch_spark.functions.text import ws_tokens
+from simsearch_spark.operators.bpe import (
+    BPE_MERGES,
+    apply_bpe,
+    bpe_encode_stats_frame,
+    learn_bpe_merges,
+)
 from simsearch_spark.operators.fanout import fanout_for_kernel
+from simsearch_spark.operators.lm import (
+    LM_ALPHA,
+    lm_doc_bigrams,
+    lm_score_self,
+    lm_score_self_agg,
+    lm_vocab,
+)
 from simsearch_spark.queries.pipeline import _WS_TOKS
 from simsearch_spark.sources.registry import load_table
 
@@ -162,9 +181,6 @@ QUALIFY rank <= {TFIDF_TOP}
 # lm_perplexity: count-based bigram LM quality score (the CCNet-style filter)
 # -----------------------------------------------------------------------------
 
-LM_ALPHA = 0.5  # add-alpha smoothing
-
-
 def q_lm_perplexity(
     spark: SparkSession, sf_dir: str, scores_only: bool = False
 ) -> DataFrame:
@@ -209,156 +225,10 @@ def q_lm_perplexity(
     # re-read the scored chain and without the persist would re-run the
     # explode+groupBy per pass.
     bgc = lm_doc_bigrams(docs).persist()
-    vocab = docs.select(F.explode(ws_tokens(F.col("text"))).alias("tok")).agg(
-        F.countDistinct("tok").alias("v")
-    )
+    vocab = lm_vocab(docs)
     if scores_only:
         return lm_score_self_agg(bgc, vocab)
     return lm_score_self(docs, bgc, vocab)
-
-
-def lm_doc_bigrams(docs: DataFrame) -> DataFrame:
-    """(doc_id, ngram, m, ctx): per-document bigram counts — the row-local
-    fan-out + one keyed map-side-combinable shuffle that both the LM
-    training tables and per-query scoring derive from."""
-    docs = fanout_for_kernel(docs, "doc_id")
-    return bigrams_from_tokens(
-        docs.select("doc_id", ws_tokens(F.col("text")).alias("toks"))
-    )
-
-
-def bigrams_from_tokens(toked: DataFrame) -> DataFrame:
-    """lm_doc_bigrams over an already-tokenized (doc_id, toks) frame — the
-    arm that lets one tokenization pass feed both the bigram counts and
-    the vocab aggregate (identical expressions, just factored)."""
-    toks = F.col("toks")
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n1),
-        F.slice(toks, 2, n1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return (
-        toked.select("doc_id", F.explode(bigrams).alias("ngram"))
-        .groupBy("doc_id", "ngram")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .withColumn("ctx", F.substring_index("ngram", " ", 1))
-    )
-
-
-def lm_count_tables(bgc: DataFrame, docs: DataFrame):
-    """The corpus-level LM artifacts — (bigram counts ``cb``, context
-    counts ``cu``, 1-row vocab size ``v``).  Mount-time output
-    (``mount/artifacts.py``): persisted once, every serve-side scoring
-    query joins them instead of re-aggregating the corpus."""
-    toks = ws_tokens(F.col("text"))
-    cb = bgc.groupBy("ngram").agg(F.sum("m").alias("cb"))
-    cu = bgc.groupBy("ctx").agg(F.sum("m").alias("cu"))
-    vocab = docs.select(F.explode(toks).alias("tok")).agg(
-        F.countDistinct("tok").alias("v")
-    )
-    return cb, cu, vocab
-
-
-def lm_score(
-    docs: DataFrame, bgc: DataFrame, cb: DataFrame, cu: DataFrame, vocab: DataFrame
-) -> DataFrame:
-    """Per-document add-α bigram log-perplexity given the LM tables —
-    identical arithmetic whether the tables were just aggregated
-    (mount training) or loaded from a mount (serve_lm_perplexity)."""
-    enriched = bgc.join(cb, "ngram").join(cu, "ctx").crossJoin(F.broadcast(vocab))
-    return _lm_score_enriched(docs, enriched)
-
-
-def lm_score_self(docs: DataFrame, bgc: DataFrame, vocab: DataFrame) -> DataFrame:
-    """Self-trained scoring (q_lm_perplexity): when the LM tables would be
-    aggregated from ``bgc`` itself, the two aggregate-then-join subplans
-    are redundant — cb/cu are window sums over the very frame being
-    scored.  Integer counts make the window and join arms exactly equal
-    (sum order cannot matter), and the plan drops from two aggregation
-    subplans + two sort-merge joins (4 exchanges of ``bgc``-derived data)
-    to two window exchanges over one pass of the persisted bigram frame.
-    The serve/audit path keeps :func:`lm_score` — mounted tables are a
-    different source and genuinely need the join."""
-    return _lm_join_docs(docs, lm_score_self_agg(bgc, vocab))
-
-
-def lm_score_self_agg(bgc: DataFrame, vocab: DataFrame) -> DataFrame:
-    """The window-sum self-scoring WITHOUT the docs re-attach join: one
-    (doc_id, n_bigrams, log_ppl) row per document that has ≥1 bigram.
-    Compositions that left-join these scores onto their own doc-keyed
-    frame (corpus_curation_pipeline) use this arm directly — the corpus
-    LEFT JOIN in :func:`lm_score_self` only re-attaches unscorable docs
-    as ``(0, NULL)`` rows, which an outer left join reproduces anyway."""
-    # ONE exchange serves both window sums (r15, guide §2.4): ``ctx`` is
-    # functionally determined by ``ngram`` (its first word, set in
-    # lm_doc_bigrams), so partitionBy("ctx", "ngram") groups rows exactly
-    # as partitionBy("ngram") does, while hash-partitioning on ``ctx``
-    # alone satisfies BOTH windows' required distributions — the second
-    # window reuses the first's exchange AND its (ctx, ngram) sort order
-    # (a prefix).  Integer counts keep the sums order-independent, so the
-    # result is bit-identical to the two-exchange form (measured 1.37 →
-    # 1.12 s at sf0.1; plan 16 → 14 Exchanges).  Skew at 100 TB is
-    # unchanged: the old plan's ``cu`` window already hash-partitioned the
-    # same frame by the same hot-context key — this removes an exchange
-    # without widening any partition.
-    enriched = (
-        bgc.repartition("ctx")
-        .withColumn("cb", F.sum("m").over(Window.partitionBy("ctx", "ngram")))
-        .withColumn("cu", F.sum("m").over(Window.partitionBy("ctx")))
-        .crossJoin(F.broadcast(vocab))
-    )
-    return _lm_scored_agg(enriched)
-
-
-def _lm_score_enriched(docs: DataFrame, enriched: DataFrame) -> DataFrame:
-    return _lm_join_docs(docs, _lm_scored_agg(enriched))
-
-
-def _lm_scored_agg(enriched: DataFrame) -> DataFrame:
-    a = F.lit(float(LM_ALPHA))
-    return (
-        enriched
-        .withColumn(
-            # nll is pinned PER (doc, ngram) ROW to an exact INTEGER of
-            # micro-nats before the cross-row fold (ADVICE r7, hardened):
-            # rounding to a 6-decimal double still let the cross-row sum's
-            # accumulation order flip the final round when the per-doc mean
-            # landed on a 7th-digit tie (observed when this frame is
-            # re-aggregated under a different plan in
-            # corpus_quality_filter).  Integer sums are order-independent
-            # and exact, so both engines divide identical integers and the
-            # final round sees the identical double.
-            "nll6",
-            F.round(
-                -F.log(
-                    (F.col("cb").cast("double") + a)
-                    / (F.col("cu").cast("double") + a * F.col("v").cast("double"))
-                )
-                * F.lit(1_000_000.0),
-                0,
-            ).cast("long"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("m").alias("n_bigrams"),
-            F.round(
-                F.sum(F.col("m") * F.col("nll6")).cast("double")
-                / (F.sum("m").cast("double") * F.lit(1_000_000.0)),
-                6,
-            ).alias("log_ppl"),
-        )
-    )
-
-
-def _lm_join_docs(docs: DataFrame, scored: DataFrame) -> DataFrame:
-    """Re-attach unscorable (<2-token) documents as ``(0, NULL)`` rows —
-    the left join the ``scores_only`` arm skips."""
-    return docs.select("doc_id").join(scored, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("n_bigrams"), F.lit(0).cast("long")).alias("n_bigrams"),
-        "log_ppl",
-    )
 
 
 SQL_LM_PERPLEXITY = f"""
@@ -432,17 +302,12 @@ FROM documents
 # bpe_merges: tokenizer training (first-N BPE merge rules)
 # -----------------------------------------------------------------------------
 
-BPE_MERGES = 8
-
-
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-``BPE_MERGES`` byte-pair-encoding merge rules learned from the
     corpus (operators/bpe.py) — tokenizer induction.  Iterative argmax
     selection is not SQL-expressible, so this query carries no DuckDB
     oracle; it is equivalence-verified against an independent pure-Python
     BPE implementation over the same fixture (tests/test_bpe.py)."""
-    from simsearch_spark.operators.bpe import learn_bpe_merges
-
     docs = load_table(spark, sf_dir, "documents")
     merges = learn_bpe_merges(docs, "text", BPE_MERGES)
     return spark.createDataFrame(
@@ -457,23 +322,10 @@ def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     document count, total subword tokens, and mean chars-per-token
     (compression the vocab bought).  Verified token-for-token against the
     independent Python BPE (tests/test_bpe.py)."""
-    from simsearch_spark.operators.bpe import apply_bpe, learn_bpe_merges
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     merges = learn_bpe_merges(docs, "text", BPE_MERGES)
     toks = apply_bpe(docs.select("source", "text"), "text", merges)
-    return toks.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("bpe_tokens")).alias("n_subwords"),
-        F.round(
-            F.sum(F.aggregate(
-                F.transform(F.col("bpe_tokens"), F.length),
-                F.lit(0).cast("long"), lambda a, x: a + x,
-            )).cast("double")
-            / F.sum(F.size("bpe_tokens")),
-            6,
-        ).alias("chars_per_token"),
-    )
+    return bpe_encode_stats_frame(toks, "source")
 
 
 # -----------------------------------------------------------------------------

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from simsearch_spark.functions.hashing import N_BANDS, N_HASHES
 from simsearch_spark.operators.dedup import LSH_BUCKET_CAP, minhash_banded_frame
 
 PAIR_SCHEMA = "id_a long, id_b long"
@@ -41,8 +42,8 @@ def minhash_candidates_stream(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_hashes: int = 16,
-    bands: int = 4,
+    n_hashes: int = N_HASHES,
+    bands: int = N_BANDS,
     shingle_n: int = 3,
     bucket_cap: int | None = LSH_BUCKET_CAP,
 ) -> DataFrame:

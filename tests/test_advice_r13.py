@@ -8,10 +8,8 @@
 2. (low) ``mount/maintain`` swap sites: write-new-then-swap must never
    pass through a state with ZERO complete copies on disk — the old
    artifact is renamed aside, not rmtree'd before the move.
-3. (low) ``mount/audit._brute_local`` 6-decimal HALF_UP rounding must
-   match Spark's ``round()`` (BigDecimal over the shortest-decimal
-   repr) exactly, including at representation boundaries where the old
-   ``floor(|x|*1e6+0.5)`` emulation was 1 ulp off.
+3. (low) ``mount/audit._brute_local`` 6-decimal HALF_UP rounding —
+   pinned in tests/test_measures.py next to ``_round6_half_up``.
 4. (low) ``serve_ivfpq_multi_topk``'s empty-candidate result must carry
    the MOUNTED id dtype (derived from the codes schema), identical to
    the non-empty path's schema, for non-bigint id mounts.
@@ -126,35 +124,6 @@ def test_swap_dirs_never_leaves_zero_copies(tmp_path, monkeypatch):
     assert os.path.isfile(os.path.join(path, "new.txt"))
     assert not os.path.isdir(path + "__old")
     assert not os.path.isdir(tmp)
-
-
-def test_round6_half_up_matches_spark_round(spark):
-    """ADVICE r13 #3: the audit's driver-side rounding equals Spark's
-    round(x, 6) on adversarial representation-boundary values (where the
-    old floor-emulation was 1 ulp off) and on a seeded random sweep."""
-    import numpy as np
-
-    from simsearch_spark.mount.audit import _round6_half_up
-
-    # values where floor(|x|*1e6+0.5) and shortest-decimal HALF_UP differ
-    boundary = [0.1250045, 0.1250325, 0.1250605, -0.1250045, -0.1250885]
-    rng = np.random.default_rng(7)
-    vals = boundary + [float(v) for v in rng.uniform(-1, 1, 200)]
-
-    got = _round6_half_up(np.array(vals))
-    want = [
-        r[0]
-        for r in spark.createDataFrame([(v,) for v in vals], "x double")
-        .select(F.round("x", 6))
-        .collect()
-    ]
-    assert list(got) == want
-    # and the old emulation genuinely disagreed on the boundary values —
-    # the regression this test exists to hold
-    old = np.copysign(
-        np.floor(np.abs(np.array(boundary)) * 1e6 + 0.5), np.array(boundary)
-    ) / 1e6
-    assert any(o != w for o, w in zip(old, want[: len(boundary)]))
 
 
 def test_multi_serve_empty_schema_matches_nonempty_for_int_ids(

@@ -19,7 +19,8 @@ from collections import Counter
 import duckdb
 import pytest
 
-from simsearch_spark.queries.vocab import BPE_MERGES, q_bpe_merges
+from simsearch_spark.operators.bpe import BPE_MERGES
+from simsearch_spark.queries.vocab import q_bpe_merges
 
 
 def _python_bpe(texts: list[str], n_merges: int) -> list[tuple[int, str, str, int]]:

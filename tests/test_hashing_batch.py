@@ -79,3 +79,16 @@ def test_batch_fold_hashes_bit_identical():
 
 def test_batch_fold_hashes_empty_input():
     assert batch_fold_hashes([]).shape == (0,)
+
+
+def test_lone_surrogate_hashes_like_scalar_fold():
+    """A lone surrogate is a legal Python str character (Arrow strings
+    decoded with ``surrogateescape``, hand-built frames); both batched
+    kernels fold it as ``ord(c)``, like the scalar reference."""
+    texts = ["a\ud800b", "x \udfff y z", "\ud800", "ok text"]
+    for k in (1, 2, 3):
+        got, nkg = batch_kgram_hashes(texts, k)
+        for t, g, n in zip(texts, got, nkg):
+            want = _scalar_kgrams(t, k)
+            assert n == len(want) and (g == want).all(), repr(t)
+    assert [int(g) for g in batch_fold_hashes(texts)] == [_scalar_fold(t) for t in texts]

@@ -1,10 +1,11 @@
-"""Layering gate: the library packages sit BELOW the declared-query layer.
+"""Layering gate: the library packages sit BELOW the declared-query layer,
+and ``mount`` sits above the rest of the library.
 
-``operators``, ``functions``, ``sources`` and ``streaming`` must never
-import ``simsearch_spark.queries``.  ``mount`` still reaches up for a few
-text-family constants and helpers; those sites are listed here
-explicitly, and the list may only shrink — a new upward import fails,
-and so does a listed site that no longer exists (delete its entry).
+The order is queries → mount → library: ``operators``, ``functions``,
+``sources``, ``streaming`` and ``mount`` never import
+``simsearch_spark.queries``, and ``operators``, ``functions``,
+``sources`` and ``streaming`` never import ``simsearch_spark.mount``.
+There is no exception list.
 """
 
 from __future__ import annotations
@@ -13,55 +14,42 @@ import ast
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "simsearch_spark"
-
-#: (module file, imported module, imported names) — text-family only
-MOUNT_QUERY_IMPORTS = {
-    ("artifacts.py", "simsearch_spark.queries.vocab", ("lm_count_tables", "lm_doc_bigrams")),
-    ("artifacts.py", "simsearch_spark.queries.pipeline", ("MINHASH_T", "N_BANDS", "N_HASHES")),
-    ("audit.py", "simsearch_spark.queries.vocab", ("lm_doc_bigrams", "lm_score")),
-    ("bpe.py", "simsearch_spark.queries.vocab", ("BPE_MERGES",)),
-    ("maintain.py", "simsearch_spark.queries.vocab", ("lm_doc_bigrams",)),
-    ("serve.py", "simsearch_spark.queries.vocab", ("lm_doc_bigrams", "lm_score")),
-}
+LIBRARY = ("operators", "functions", "sources", "streaming")
 
 
-def _query_imports(path: Path) -> set[tuple[str, str, tuple[str, ...]]]:
-    """Every import of ``simsearch_spark.queries`` (any submodule, any
+def _imports_of(path: Path, layer: str) -> set[tuple[str, str, tuple[str, ...]]]:
+    """Every import of ``simsearch_spark.<layer>`` (any submodule, any
     form, at any nesting depth) in one module."""
+    target = f"simsearch_spark.{layer}"
     found = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.ImportFrom) and node.module:
             names = tuple(sorted(a.name for a in node.names))
-            if node.module.startswith("simsearch_spark.queries"):
+            if node.module == target or node.module.startswith(target + "."):
                 found.add((path.name, node.module, names))
-            elif node.module == "simsearch_spark" and "queries" in names:
-                found.add((path.name, "simsearch_spark.queries", names))
+            elif node.module == "simsearch_spark" and layer in names:
+                found.add((path.name, target, names))
         elif isinstance(node, ast.Import):
             for a in node.names:
-                if a.name.startswith("simsearch_spark.queries"):
+                if a.name == target or a.name.startswith(target + "."):
                     found.add((path.name, a.name, ()))
     return found
 
 
-def test_library_packages_never_import_queries():
-    bad = {
+def _upward(pkgs: tuple[str, ...], layer: str) -> list:
+    return sorted(
         (f"{pkg}/{f}", mod, names)
-        for pkg in ("operators", "functions", "sources", "streaming")
+        for pkg in pkgs
         for path in sorted((PKG / pkg).rglob("*.py"))
-        for f, mod, names in _query_imports(path)
-    }
-    assert not bad, f"library modules import the declared-query layer: {sorted(bad)}"
+        for f, mod, names in _imports_of(path, layer)
+    )
 
 
-def test_mount_query_imports_match_the_shrinking_list():
-    found = set()
-    for path in sorted((PKG / "mount").rglob("*.py")):
-        found |= _query_imports(path)
-    assert found - MOUNT_QUERY_IMPORTS == set(), (
-        f"new upward imports from mount/: {sorted(found - MOUNT_QUERY_IMPORTS)}"
-    )
-    assert MOUNT_QUERY_IMPORTS - found == set(), (
-        "listed sites no longer exist; delete their entries: "
-        f"{sorted(MOUNT_QUERY_IMPORTS - found)}"
-    )
-    assert not any("ivfpq" in mod or "cluster" in mod for _f, mod, _n in found)
+def test_library_packages_never_import_queries():
+    bad = _upward(LIBRARY + ("mount",), "queries")
+    assert not bad, f"library modules import the declared-query layer: {bad}"
+
+
+def test_library_packages_never_import_mount():
+    bad = _upward(LIBRARY, "mount")
+    assert not bad, f"library modules import the mount layer: {bad}"

@@ -36,6 +36,34 @@ def test_vec_lit_round_trips_bit_exact(spark):
     assert bits(a.first().v) == bits(b.first().v)
 
 
+def test_round6_half_up_matches_spark_round(spark):
+    """ADVICE r13 #3: the driver-side rounding (PQ training, the audit's
+    brute-force arm) equals Spark's round(x, 6) on adversarial
+    representation-boundary values (where the old floor-emulation was
+    1 ulp off) and on a seeded random sweep."""
+    import numpy as np
+
+    # values where floor(|x|*1e6+0.5) and shortest-decimal HALF_UP differ
+    boundary = [0.1250045, 0.1250325, 0.1250605, -0.1250045, -0.1250885]
+    rng = np.random.default_rng(7)
+    vals = boundary + [float(v) for v in rng.uniform(-1, 1, 200)]
+
+    got = [measures._round6_half_up(v) for v in vals]
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(v,) for v in vals], "x double")
+        .select(F.round("x", 6))
+        .collect()
+    ]
+    assert got == want
+    # and the old emulation genuinely disagreed on the boundary values —
+    # the regression this test exists to hold
+    old = np.copysign(
+        np.floor(np.abs(np.array(boundary)) * 1e6 + 0.5), np.array(boundary)
+    ) / 1e6
+    assert any(o != w for o, w in zip(old, want[: len(boundary)]))
+
+
 def test_abs_diff(spark):
     assert one(spark, measures.abs_diff(F.lit(3.0), F.lit(10.0))) == 7.0
 

@@ -122,7 +122,8 @@ def test_lm_scores_only_arm(spark, sf_dir):
     the identity that lets corpus_curation_pipeline (which left-joins the
     scores onto its own doc-keyed frame anyway) skip one `documents` scan
     and one doc-keyed join: X ⟕ (docs ⟕ S) ≡ X ⟕ S on the unique key."""
-    from simsearch_spark.queries.vocab import _lm_join_docs, q_lm_perplexity
+    from simsearch_spark.operators.lm import _lm_join_docs
+    from simsearch_spark.queries.vocab import q_lm_perplexity
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     scores = q_lm_perplexity(spark, sf_dir, scores_only=True)
@@ -137,12 +138,8 @@ def test_lm_window_arm_equals_join_arm(spark, sf_dir):
     frame (lm_score_self); the serve/audit join arm (lm_score over
     aggregated tables) must stay exactly equal — integer counts make the
     two folds order-independent, so equality is bitwise, not approximate."""
-    from simsearch_spark.queries.vocab import (
-        lm_count_tables,
-        lm_doc_bigrams,
-        lm_score,
-        q_lm_perplexity,
-    )
+    from simsearch_spark.operators.lm import lm_count_tables, lm_doc_bigrams, lm_score
+    from simsearch_spark.queries.vocab import q_lm_perplexity
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     bgc = lm_doc_bigrams(docs).persist()

@@ -5,7 +5,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from simsearch_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
+from simsearch_spark.operators.pq import nearest_centroid, pq_adc_topk, pq_encode, pq_train
 
 
 def _frame(spark, vecs):
@@ -394,6 +394,87 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
         assert got[qid] == [(r.vec_id, r.adc_dist, r.cos_sim) for r in single], qid
 
 
+def _pq_train_engine(df, id_col, vec_col, m=4, ksub=8, iters=2):
+    """The retired pre-r14 in-engine training arm (one exploded frame,
+    each Lloyd pass one batched Spark job) — kept here only as the
+    equivalence oracle for ``pq_train_rows``; production paths all use
+    the driver-local arm."""
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    if row is None:
+        raise ValueError("cannot probe vector width of an empty frame")
+    dim = int(row[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+    dsub = dim // m
+    vec = F.col(vec_col)
+
+    # one job: all m seed sets (rounded IN-ENGINE — F.round is HALF_UP;
+    # Python's round() is banker's and must never touch these values)
+    seed_rows = (
+        df.orderBy(id_col)
+        .limit(ksub)
+        .select(
+            *[
+                F.transform(
+                    F.slice(vec, j * dsub + 1, dsub),
+                    lambda x: F.round(x.cast("double"), 6),
+                ).alias(f"s{j}")
+                for j in range(m)
+            ]
+        )
+        .collect()
+    )
+    codebooks: list[dict[int, list[float]]] = [
+        {i: [float(v) for v in r[f"s{j}"]] for i, r in enumerate(seed_rows)}
+        for j in range(m)
+    ]
+
+    # (id, j, slice) exploded once; every pass groups on (j, cluster, dim)
+    flat = df.select(
+        F.col(id_col),
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"),
+                        F.slice(vec, j * dsub + 1, dsub).alias("_sub"),
+                    )
+                    for j in range(m)
+                ]
+            )
+        ),
+    )
+    for _ in range(iters):
+        # per-row argmin against the row's OWN subspace codebook, chosen
+        # by a when-chain on j (each distance expression once)
+        best = None
+        for j in reversed(range(m)):
+            bj = nearest_centroid(F.col("_sub"), codebooks[j])
+            best = bj if best is None else F.when(F.col("j") == j, bj).otherwise(best)
+        rows = (
+            flat.withColumn("cluster_id", best["cluster_id"])
+            .select("j", "cluster_id", F.posexplode(F.col("_sub")).alias("pos", "v"))
+            .groupBy("j", "cluster_id", "pos")
+            .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("mv"))
+            .collect()
+        )
+        means: dict[tuple[int, int], dict[int, float]] = {}
+        for r in rows:
+            means.setdefault((int(r["j"]), int(r["cluster_id"])), {})[int(r["pos"])] = float(r["mv"])
+        codebooks = [
+            {
+                cid: (
+                    [means[(j, cid)][p] for p in sorted(means[(j, cid)])]
+                    if (j, cid) in means
+                    else old  # empty cluster keeps its previous centroid
+                )
+                for cid, old in codebooks[j].items()
+            }
+            for j in range(m)
+        ]
+    return codebooks
+
+
 def test_driver_local_training_equals_engine_arm(spark, sf_dir):
     """r14 optimization pin: ``pq_train`` (one bounded-sample collect +
     driver-local Lloyd, ``pq_train_rows``) must produce codebooks
@@ -406,7 +487,6 @@ def test_driver_local_training_equals_engine_arm(spark, sf_dir):
         PQ_KSUB,
         PQ_M,
         _cent_rows6,
-        _pq_train_engine,
         _sample_rows,
         _train_books_residual_rows,
         pq_training_sample,
